@@ -193,6 +193,116 @@ def part_supplier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# The supplier graphs, written once. Each builder below has a DuckDB twin
+# right next to it, and every graph face and its oracle read their graph
+# through the pair, so both sides of a face see the same edges by
+# construction. Two graphs are in use:
+# - co-ORDER (undirected): suppliers shipping lines of the same order
+#   inside a shipdate window, one (u, v) row per pair with u < v;
+# - co-PART (directed, both orientations): suppliers shipping the same part.
+# --------------------------------------------------------------------------
+_YEAR_1997 = ("1997-01-01", "1998-01-01")
+_H1_1997 = ("1997-01-01", "1997-07-01")
+
+
+def _co_order_edges(spark: SparkSession, sf_dir: str, window) -> DataFrame:
+    """Undirected co-order edges (u, v), u < v, over shipdates in the
+    half-open ``window`` (lo, hi)."""
+    lo, hi = window
+    li = load_table(spark, sf_dir, "lineitem")
+    pairs = (
+        li.filter(
+            (F.col("l_shipdate") >= F.lit(lo).cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit(hi).cast("timestamp"))
+        )
+        .select("l_orderkey", "l_suppkey")
+        .distinct()
+    )
+    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
+    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
+    return (
+        a.join(b, "ok")
+        .filter(F.col("sa") != F.col("sb"))
+        .select(F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v"))
+        .distinct()
+    )
+
+
+def _co_order_edges_sql(window) -> str:
+    """``_co_order_edges`` as the CTEs ``pairs`` and ``und``."""
+    lo, hi = window
+    return f"""pairs AS MATERIALIZED (
+  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '{lo}'
+    AND l_shipdate < TIMESTAMP '{hi}'
+),
+und AS MATERIALIZED (
+  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
+                  greatest(a.l_suppkey, b.l_suppkey) AS v
+  FROM pairs a JOIN pairs b
+    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
+)"""
+
+
+def _co_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pk, src, dst) for every two distinct suppliers of part pk."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pairs = li.select("l_partkey", "l_suppkey").distinct()
+    a = pairs.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src"))
+    b = pairs.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst"))
+    return a.join(b, "pk").filter(F.col("src") != F.col("dst"))
+
+
+def _co_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed co-part edges: distinct (src, dst)."""
+    return _co_part_pairs(spark, sf_dir).select("src", "dst").distinct()
+
+
+# ``_co_part_pairs`` as the CTEs ``pairs`` and ``co_part``; with
+# ``_co_part_edges`` as ``edges`` on top.
+_CO_PART_SQL = """pairs AS MATERIALIZED (
+  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
+),
+co_part AS (
+  SELECT a.l_partkey AS pk, a.l_suppkey AS src, b.l_suppkey AS dst
+  FROM pairs a JOIN pairs b
+    ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
+)"""
+_CO_PART_EDGES_SQL = (
+    _CO_PART_SQL
+    + """,
+edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM co_part)"""
+)
+
+
+def _orient_by_degree(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Degree orientation of undirected edges (u, v) given node degrees
+    (node, d): each edge points from its (lower-degree, then lower-id)
+    endpoint to the other, as (src, dst)."""
+    du = broadcast_if_small(deg.select(F.col("node").alias("u"), F.col("d").alias("du")))
+    dv = broadcast_if_small(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")))
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    return (
+        und.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        )
+    )
+
+
+# ``_orient_by_degree`` over CTEs ``und`` and ``deg`` as the CTE ``ori``.
+_ORIENT_SQL = """ori AS (
+  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
+         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst
+  FROM und JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v
+)"""
+
+
+# --------------------------------------------------------------------------
 # Q: pagerank_suppliers — iterative graph algorithm as unrolled dataflow:
 # 3 PageRank iterations (damping 0.85) over the co-supplier graph (edge
 # between suppliers shipping the same part; symmetric, so there are no
@@ -210,15 +320,8 @@ def part_supplier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "pagerank_suppliers",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-),
-edges AS (
-  SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-  FROM pairs a JOIN pairs b
-    ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_CO_PART_EDGES_SQL},
 nodes AS (SELECT DISTINCT src AS node FROM edges),
 n AS (SELECT count(*) AS n FROM nodes),
 deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
@@ -251,20 +354,6 @@ LIMIT 20
 """,
 )
 def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src")
-    )
-    b = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst")
-    )
-    edges = (
-        a.join(b, "pk")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
     from f1_bigdata_pyspark_spark.utils import materialize
 
     # pre-partition the edge table by src ONCE: deg and every iteration's
@@ -273,7 +362,7 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale with the NODE count (10^9 on a web graph), so they go through
     # the size policy — broadcast while small, co-partitioned shuffle join
     # when not — never an unconditional replicate-to-every-executor hint.
-    edges = materialize(edges.repartition("src"))
+    edges = materialize(_co_part_edges(spark, sf_dir).repartition("src"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()  # driver-side scalar: the PageRank base constant
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -317,28 +406,14 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_graph_triangles",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 deg AS (
   SELECT node, count(*) AS d FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
   ) GROUP BY node
 ),
-ori AS (
-  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst
-  FROM und JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v
-),
+{_ORIENT_SQL},
 tri AS (
   SELECT count(*) AS n_triangles
   FROM ori e1
@@ -357,45 +432,15 @@ FROM tri
 def supplier_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = (
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
-    und = materialize(und)  # read by deg + orientation + three join sides
+    # read by deg + orientation + three join sides
+    und = materialize(_co_order_edges(spark, sf_dir, _YEAR_1997))
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    du = broadcast_if_small(deg.select(F.col("node").alias("u"), F.col("d").alias("du")))
-    dv = broadcast_if_small(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")))
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    ori = materialize(
-        und.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        )
-    )
+    ori = materialize(_orient_by_degree(und, deg))
     # wedge pairs are ORDERED (d1 <> d2, both orders kept): the closing
     # edge is degree-oriented and exists in exactly one direction, so each
     # triangle joins exactly once — an id-ordered filter (d1 < d2) would
@@ -449,21 +494,9 @@ _KCORE_ROUNDS = 7
 
 
 def _kcore_oracle() -> str:
-    blocks = [
-        """e0 AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1997-07-01') a
-  JOIN (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1997-07-01') b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-)"""
-    ]
+    blocks = [_co_order_edges_sql(_H1_1997)]
     for i in range(1, _KCORE_ROUNDS + 1):
-        p = f"e{i - 1}"
+        p = "und" if i == 1 else f"e{i - 1}"
         blocks.append(
             f"""deg{i} AS MATERIALIZED (
   SELECT node, count(*) AS d FROM (
@@ -497,25 +530,7 @@ SELECT {_KCORE_K} AS k,
 def supplier_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    e = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    e = materialize(_co_order_edges(spark, sf_dir, _H1_1997))
     prev_edges = None
     for _ in range(_KCORE_ROUNDS):
         prev_edges = e
@@ -614,18 +629,8 @@ def supplier_part_butterflies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_graph_assortativity",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 deg AS (
   SELECT node, count(*) AS d FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -646,25 +651,7 @@ FROM sym
 def supplier_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    und = materialize(_co_order_edges(spark, sf_dir, _YEAR_1997))
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -696,18 +683,8 @@ def supplier_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "nation_modularity",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1997-07-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_H1_1997)},
 comm AS (SELECT s_suppkey AS node, s_nationkey AS c FROM supplier),
 m AS (SELECT count(*) AS m FROM und),
 deg AS (
@@ -734,23 +711,7 @@ FROM ctot LEFT JOIN intra ON ctot.c = intra.c CROSS JOIN m
 def nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v"))
-        .distinct()
-    )
+    und = materialize(_co_order_edges(spark, sf_dir, _H1_1997))
     comm = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"), F.col("s_nationkey").alias("c")
     )
@@ -815,15 +776,8 @@ def nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_bfs_hops",
-    oracle="""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-),
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-  FROM pairs a JOIN pairs b
-    ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_CO_PART_EDGES_SQL},
 nodes AS (SELECT DISTINCT src AS node FROM edges),
 src0 AS (SELECT min(node) AS s FROM nodes),
 d0 AS (SELECT s AS node, CAST(0 AS BIGINT) AS d FROM src0),
@@ -862,17 +816,7 @@ ORDER BY d
 def supplier_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src"))
-    b = pairs.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst"))
-    edges = materialize(
-        a.join(b, "pk")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .repartition("src")
-    )
+    edges = materialize(_co_part_edges(spark, sf_dir).repartition("src"))
     from f1_bigdata_pyspark_spark.operators.graph import bfs_hops
 
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -984,18 +928,11 @@ def supplier_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_weighted_sssp",
-    oracle="""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-),
+    oracle=f"""
+WITH {_CO_PART_SQL},
 edges AS MATERIALIZED (
   SELECT src, dst, CAST(1 AS DOUBLE) / count(*) AS w
-  FROM (
-    SELECT DISTINCT a.l_partkey AS pk, a.l_suppkey AS src,
-           b.l_suppkey AS dst
-    FROM pairs a JOIN pairs b
-      ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
-  )
+  FROM (SELECT DISTINCT pk, src, dst FROM co_part)
   GROUP BY src, dst
 ),
 d0 AS (SELECT (SELECT min(src) FROM edges) AS node, 0.0 AS dist),
@@ -1040,18 +977,8 @@ def supplier_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.operators.graph import bellman_ford
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src")
-    )
-    b = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst")
-    )
     edges = materialize(
-        a.join(b, "pk")
-        .filter(F.col("src") != F.col("dst"))
-        .select("pk", "src", "dst")
+        _co_part_pairs(spark, sf_dir)
         .distinct()
         .groupBy("src", "dst")
         .agg((F.lit(1.0) / F.count(F.lit(1))).alias("w"))
@@ -1079,18 +1006,8 @@ def supplier_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_label_propagation",
-    oracle="""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 sym AS MATERIALIZED (
   SELECT u AS src, v AS dst FROM und
   UNION ALL
@@ -1132,29 +1049,7 @@ def supplier_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa")
-    )
-    b = pairs.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb")
-    )
-    und = (
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    und = _co_order_edges(spark, sf_dir, _YEAR_1997)
     sym = materialize(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -1326,18 +1221,8 @@ def supplier_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFram
 # --------------------------------------------------------------------------
 @query(
     "link_prediction_adamic_adar",
-    oracle="""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 sym AS MATERIALIZED (
   SELECT u AS src, v AS dst FROM und
   UNION ALL SELECT v, u FROM und
@@ -1369,29 +1254,7 @@ LIMIT 20
 def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa")
-    )
-    b = pairs.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb")
-    )
-    und = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    und = materialize(_co_order_edges(spark, sf_dir, _YEAR_1997))
     sym = materialize(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -1443,28 +1306,14 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_local_clustering",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 deg AS (
   SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
   ) GROUP BY node
 ),
-ori AS (
-  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS src,
-         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS dst
-  FROM und JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v
-),
+{_ORIENT_SQL},
 tri AS (
   SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
   FROM ori e1
@@ -1493,25 +1342,7 @@ LIMIT 20
 def supplier_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    und = materialize(_co_order_edges(spark, sf_dir, _YEAR_1997))
     # explode-array endpoint emission: ONE scan of the edge table instead
     # of a unionAll double-read (halves the exchange count of the rollup)
     deg = (
@@ -1519,23 +1350,7 @@ def supplier_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
-    du = broadcast_if_small(
-        deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    )
-    dv = broadcast_if_small(
-        deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    ori = materialize(
-        und.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        )
-    )
+    ori = materialize(_orient_by_degree(und, deg))
     e1 = ori.select(F.col("src").alias("s"), F.col("dst").alias("d1"))
     e2 = ori.select(F.col("src").alias("s"), F.col("dst").alias("d2"))
     closing = ori.select(
@@ -1590,18 +1405,8 @@ def supplier_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "degree_powerlaw_fit",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 deg AS (
   SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -1631,27 +1436,9 @@ FROM sums
 """,
 )
 def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = (
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
     from f1_bigdata_pyspark_spark.utils import materialize
 
+    und = _co_order_edges(spark, sf_dir, _YEAR_1997)
     deg = materialize(
         und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -1702,18 +1489,8 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "rich_club_coefficient",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-    AND l_shipdate < TIMESTAMP '1998-01-01'
-),
-und AS (
-  SELECT DISTINCT least(a.l_suppkey, b.l_suppkey) AS u,
-                  greatest(a.l_suppkey, b.l_suppkey) AS v
-  FROM pairs a JOIN pairs b
-    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_co_order_edges_sql(_YEAR_1997)},
 deg AS (
   SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
     SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -1741,25 +1518,7 @@ ORDER BY nk.k
 def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    a = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sa"))
-    b = pairs.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sb"))
-    und = materialize(
-        a.join(b, "ok")
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            F.least("sa", "sb").alias("u"), F.greatest("sa", "sb").alias("v")
-        )
-        .distinct()
-    )
+    und = materialize(_co_order_edges(spark, sf_dir, _YEAR_1997))
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -1818,15 +1577,8 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "supplier_anf_curve",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-),
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-  FROM pairs a JOIN pairs b
-    ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_CO_PART_EDGES_SQL},
 nodes AS (SELECT DISTINCT src AS node FROM edges),
 n AS (SELECT count(*) AS n FROM nodes),
 h0 AS MATERIALIZED (
@@ -1883,20 +1635,7 @@ def supplier_anf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.functions.text import md5_long
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src")
-    )
-    b = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst")
-    )
-    edges = materialize(
-        a.join(b, "pk")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = materialize(_co_part_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     hashed = nodes.select(
         "node", md5_long(F.col("node").cast("string")).alias("x")
@@ -1971,15 +1710,8 @@ def supplier_anf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "personalized_pagerank_seed",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-),
-edges AS MATERIALIZED (
-  SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
-  FROM pairs a JOIN pairs b
-    ON a.l_partkey = b.l_partkey AND a.l_suppkey <> b.l_suppkey
-),
+    oracle=f"""
+WITH {_CO_PART_EDGES_SQL},
 seed AS (SELECT min(src) AS s FROM edges),
 deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
 r0 AS (
@@ -2016,25 +1748,9 @@ LIMIT 10
 """,
 )
 def personalized_pagerank_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
     from f1_bigdata_pyspark_spark.utils import materialize
 
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_partkey", "l_suppkey").distinct()
-    a = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("src")
-    )
-    b = pairs.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("dst")
-    )
-    edges = materialize(
-        a.join(b, "pk")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = materialize(_co_part_edges(spark, sf_dir))
     seed = edges.agg(F.min("src")).head()[0]  # 1-value probe, bounded
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     rank = edges.select(F.col("src").alias("node")).distinct().select(

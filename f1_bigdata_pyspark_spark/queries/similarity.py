@@ -11,8 +11,13 @@ the bucketing/assignment is engine-independent and hash-checkable.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+from typing import NamedTuple
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from f1_bigdata_pyspark_spark.catalog import load_table
@@ -24,6 +29,7 @@ from f1_bigdata_pyspark_spark.operators.similarity import (
     similarity_threshold,
 )
 from f1_bigdata_pyspark_spark.queries.registry import query
+from f1_bigdata_pyspark_spark.utils import materialize
 
 _QUERY_VEC_ID = 0
 
@@ -32,6 +38,160 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     emb = load_table(spark, sf_dir, "embeddings")
     row = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
     return [float(x) for x in row["embedding"]]
+
+
+# --------------------------------------------------------------------------
+# The IVF sub-plans, written once. Every IVF face uses the same k=16
+# centroid panel (the first 16 vectors by id — a deterministic stand-in
+# for sampled k-means centroids) and the same rounded-cosine argmax
+# assignment (``ivf_assign``). Each Spark builder has its DuckDB twin
+# here too, so a face and its oracle share one definition of the cells.
+# --------------------------------------------------------------------------
+def _seed_centroids(emb: DataFrame) -> DataFrame:
+    """The centroid panel as (centroid_id, centroid)."""
+    return emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("centroid"),
+    )
+
+
+def _probe_cells(centroids: DataFrame, q: Column, nprobe: int) -> list[int]:
+    """Ids of the ``nprobe`` centroids nearest the query, nearest first.
+    Ranked driver-side over the 16-row panel: bounded metadata, the planner
+    input (like a partition predicate), not a data collect."""
+    return [
+        r.centroid_id
+        for r in centroids.select(
+            "centroid_id",
+            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
+        )
+        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
+        .limit(nprobe)
+        .collect()
+    ]
+
+
+def _cell_rows(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, centroid_id, embedding): each vector with its cell."""
+    return (
+        ivf_assign(vectors, centroids)
+        .select("vec_id", "centroid_id")
+        .join(vectors.select("vec_id", "embedding"), "vec_id")
+    )
+
+
+def _append_cells(
+    table, vectors: DataFrame, centroids: DataFrame, writers: int = 16
+) -> None:
+    """Assign ``vectors`` to cells and append them to the cell-partitioned
+    index ``table`` (a SnapshotTable, one file per cell directory).
+
+    The SCALE layout: hash-repartition by cell, so index writers scale
+    with cells — each cell lands wholly in one task and the partitionBy
+    write still emits exactly ONE file per cell dir (same file arithmetic
+    as a single writer, n_cells the parallelism). repartition, not
+    coalesce: coalesce would collapse the assignment window + cross-join
+    upstream too."""
+    table.commit(
+        _cell_rows(vectors, centroids).repartition(writers, "centroid_id"),
+        mode="append",
+        partition_by=["centroid_id"],
+    )
+
+
+@contextmanager
+def _scratch_dir():
+    """A temporary directory for the index a face builds, removed on exit.
+    The face must ``materialize`` its result inside the block: the driver
+    collects later, when the index files are gone."""
+    root = tempfile.mkdtemp(prefix="ivf_index_")
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _top20(cells: DataFrame, q: Column) -> DataFrame:
+    """Exact top-20 of ``cells``' vectors by rounded cosine to the query."""
+    return (
+        cells.select(
+            "vec_id",
+            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        .limit(20)
+    )
+
+
+def _ivf_search_inputs(spark: SparkSession, sf_dir: str):
+    """(embeddings, centroid panel, query literal, the query's two nearest
+    cells): what every nprobe=2 search over a persisted index starts from."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    centroids = _seed_centroids(emb)
+    q = F.lit(_query_vec(spark, sf_dir)).cast("array<double>")
+    return emb, centroids, q, _probe_cells(centroids, q, 2)
+
+
+def _with_stats(top: DataFrame, **stats) -> DataFrame:
+    """Materialize a ``_top20`` result with driver-side readings as literal
+    columns, in argument order: booleans as they are, counts as longs."""
+    for name, value in stats.items():
+        v = F.lit(value)
+        v = v if isinstance(value, bool) else v.cast("long")
+        top = top.withColumn(name, v)
+    return materialize(
+        top.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+    )
+
+
+# ``ivf_assign`` over ``_seed_centroids`` as the CTEs ``e`` (vectors),
+# ``c`` (centroids), ``scored`` and ``assign`` (vec_id, centroid_id,
+# cos_sim).
+_IVF_ASSIGN_SQL = """e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+), c AS (
+  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
+), scored AS (
+  SELECT e.vec_id, c.centroid_id,
+         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
+  FROM e CROSS JOIN c
+), assign AS (
+  SELECT vec_id, centroid_id, cos_sim FROM (
+    SELECT vec_id, centroid_id, cos_sim,
+           row_number() OVER (PARTITION BY vec_id
+                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
+    FROM scored) t WHERE rn = 1
+)"""
+
+# The query vector as the CTE ``q`` (over ``e``).
+_QUERY_SQL = f"q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID})"
+
+# ``_probe_cells(..., 2)`` as the CTEs ``q`` and ``qcells``.
+_IVF_PROBE_SQL = f"""{_QUERY_SQL}, qcells AS (
+  SELECT c.centroid_id
+  FROM c CROSS JOIN q
+  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
+           c.centroid_id ASC
+  LIMIT 2
+)"""
+
+
+def _ivf_probe_top20_sql(ctes: str = "", cols: str = "", where: str = "") -> str:
+    """Oracle of an nprobe=2 IVF search: the exact top-20 by rounded cosine
+    among the vectors of the query's two nearest cells. A face adds its
+    own CTEs, output columns (each line starting with a comma) and row
+    filters (each starting with AND)."""
+    ctes = f",\n{ctes}" if ctes else ""
+    return f"""
+WITH {_IVF_ASSIGN_SQL}, {_IVF_PROBE_SQL}{ctes}
+SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim{cols}
+FROM e
+JOIN assign a ON a.vec_id = e.vec_id
+CROSS JOIN q
+WHERE a.centroid_id IN (SELECT centroid_id FROM qcells){where}
+ORDER BY cos_sim DESC, e.vec_id ASC
+LIMIT 20
+"""
 
 
 # --------------------------------------------------------------------------
@@ -117,9 +277,11 @@ def embedding_norms_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``_hyperplane``), so DuckDB recomputes the exact bucketing relationally —
 # a full value-hash check on an ANN operator, not a rows-only shrug.
 # --------------------------------------------------------------------------
-@query(
-    "ann_lsh_topk",
-    oracle=f"""
+def _lsh_top20_sql(probe: str) -> str:
+    """Oracle of a 6-plane LSH search: the exact top-20 by rounded cosine
+    among the vectors whose ``bucket`` passes ``probe`` against the
+    query's bucket ``qb``."""
+    return f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), x AS (
@@ -138,11 +300,13 @@ WITH e AS (
 )
 SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim
 FROM e JOIN buckets b ON e.vec_id = b.vec_id CROSS JOIN q
-WHERE b.bucket = q.qb
+WHERE {probe}
 ORDER BY cos_sim DESC, e.vec_id ASC
 LIMIT 20
-""",
-)
+"""
+
+
+@query("ann_lsh_topk", oracle=_lsh_top20_sql("b.bucket = q.qb"))
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
@@ -157,35 +321,15 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ann_ivf_cells",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), best AS (
-  SELECT vec_id, centroid_id,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-  FROM scored
-)
+    oracle=f"""
+WITH {_IVF_ASSIGN_SQL}
 SELECT centroid_id, count(*) AS n_vecs
-FROM best WHERE rn = 1 GROUP BY centroid_id ORDER BY centroid_id
+FROM assign GROUP BY centroid_id ORDER BY centroid_id
 """,
 )
 def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = (
-        emb.filter(F.col("vec_id") < 16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid"),
-        )
-    )
-    assigned = ivf_assign(emb, centroids)
+    assigned = ivf_assign(emb, _seed_centroids(emb))
     return (
         assigned.groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -234,6 +378,47 @@ def label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_cohesion(emb).orderBy("label")
 
 
+def _lloyd_sql(rounds: int) -> str:
+    """``rounds`` Lloyd assignments from the seed panel as CTEs ``a1`` …
+    ``a{rounds}`` (vec_id, cid, cs): round r assigns every vector to its
+    nearest centroid of ``c{r-1}`` by rounded cosine (cid tie-break), and
+    ``c{r}`` is the per-dimension mean of round r's cells (``kmeans_step``).
+    Every step is MATERIALIZED: DuckDB inlines CTE chains, and the
+    cross joins would be re-planned once per later reference."""
+    parts = [
+        """e AS MATERIALIZED (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+), c0 AS MATERIALIZED (
+  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16
+)"""
+    ]
+    for r in range(1, rounds + 1):
+        c = f"c{r - 1}"
+        parts.append(
+            f"""a{r} AS MATERIALIZED (
+  SELECT vec_id, cid, cs FROM (
+    SELECT e.vec_id, {c}.cid,
+           round(list_cosine_similarity(e.v, {c}.cv), 6) AS cs,
+           row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round(list_cosine_similarity(e.v, {c}.cv), 6) DESC,
+                        {c}.cid ASC) AS rn
+    FROM e CROSS JOIN {c}) WHERE rn = 1
+)"""
+        )
+        if r < rounds:
+            parts.append(
+                f"""x{r} AS MATERIALIZED (
+  SELECT a{r}.cid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
+  FROM a{r} JOIN e USING (vec_id)
+), c{r} AS MATERIALIZED (
+  SELECT cid, list(m ORDER BY pos) AS cv FROM (
+    SELECT cid, pos, avg(val) AS m FROM x{r} GROUP BY cid, pos
+  ) m{r} GROUP BY cid
+)"""
+            )
+    return ", ".join(parts)
+
+
 # --------------------------------------------------------------------------
 # Q: ivf_kmeans_cells — the IVF *training* step: one Lloyd iteration from
 # the deterministic first-16 seed (assign → recompute means), then the
@@ -244,39 +429,8 @@ def label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_kmeans_cells",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c0 AS (
-  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16
-), s1 AS (
-  SELECT e.vec_id, c0.cid,
-         round(list_cosine_similarity(e.v, c0.cv), 6) AS cs
-  FROM e CROSS JOIN c0
-), a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cs DESC, cid ASC) AS rn
-    FROM s1) WHERE rn = 1
-), x1 AS (
-  SELECT a1.cid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
-  FROM a1 JOIN e USING (vec_id)
-), m1 AS (
-  SELECT cid, pos, avg(val) AS m FROM x1 GROUP BY cid, pos
-), c1 AS (
-  SELECT cid, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cid
-), s2 AS (
-  SELECT e.vec_id, c1.cid,
-         round(list_cosine_similarity(e.v, c1.cv), 6) AS cs
-  FROM e CROSS JOIN c1
-), a2 AS (
-  SELECT vec_id, cid, cs FROM (
-    SELECT vec_id, cid, cs,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cs DESC, cid ASC) AS rn
-    FROM s2) WHERE rn = 1
-)
+    oracle=f"""
+WITH {_lloyd_sql(2)}
 SELECT cid AS centroid_id, count(*) AS n_vecs, round(avg(cs), 6) AS avg_cos
 FROM a2 GROUP BY cid ORDER BY centroid_id
 """,
@@ -286,10 +440,7 @@ def ivf_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.operators.similarity import kmeans_step
 
     emb = load_table(spark, sf_dir, "embeddings")
-    seed = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    seed = _seed_centroids(emb)
     # one Lloyd iteration; the trained table is k=16 rows by construction,
     # so rebuild it as a LocalRelation (real size stats) — its two
     # downstream broadcasts are then planner-approved, not hint-forced on
@@ -489,29 +640,7 @@ def int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ann_multiprobe_topk",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), x AS (
-  SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS j FROM e
-), bits AS (
-  SELECT x.vec_id, p.p,
-         CASE WHEN sum(x.val * sin(1000003 * p.p + x.j)) >= 0
-              THEN CAST(1 << p.p AS INT) ELSE 0 END AS bit
-  FROM x CROSS JOIN range(6) AS p(p)
-  GROUP BY x.vec_id, p.p
-), buckets AS (
-  SELECT vec_id, CAST(sum(bit) AS INT) AS bucket FROM bits GROUP BY vec_id
-), q AS (
-  SELECT e.v AS qv, b.bucket AS qb
-  FROM e JOIN buckets b ON e.vec_id = b.vec_id WHERE e.vec_id = {_QUERY_VEC_ID}
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim
-FROM e JOIN buckets b ON e.vec_id = b.vec_id CROSS JOIN q
-WHERE xor(b.bucket, q.qb) IN (0, 1, 2, 4, 8, 16, 32)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+    oracle=_lsh_top20_sql("xor(b.bucket, q.qb) IN (0, 1, 2, 4, 8, 16, 32)"),
 )
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.operators.similarity import lsh_multiprobe_topk
@@ -532,46 +661,13 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ann_ivf_nprobe_topk",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), best AS (
-  SELECT vec_id, centroid_id,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-  FROM scored
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim
-FROM e
-JOIN best b ON b.vec_id = e.vec_id AND b.rn = 1
-CROSS JOIN q
-WHERE b.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+    oracle=_ivf_probe_top20_sql(),
 )
 def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.operators.similarity import ivf_probe_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    centroids = _seed_centroids(emb)
     qv = _query_vec(spark, sf_dir)
     return ivf_probe_topk(emb, centroids, qv, k=20, nprobe=2)
 
@@ -589,22 +685,8 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "knn_join_within_cells",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored) t WHERE rn = 1
-), pairs AS (
+    oracle=f"""
+WITH {_IVF_ASSIGN_SQL}, pairs AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          round(list_cosine_similarity(ea.v, eb.v), 6) AS cos_sim
   FROM assign a
@@ -628,12 +710,7 @@ def knn_join_within_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    assigned = ivf_assign(emb, centroids).select("vec_id", "centroid_id")
-    cells = assigned.join(emb.select("vec_id", "embedding"), "vec_id")
+    cells = _cell_rows(emb, _seed_centroids(emb))
     a = cells.select(
         F.col("vec_id").alias("query_id"),
         F.col("centroid_id").alias("cell"),
@@ -688,11 +765,9 @@ _IL2_SQL = (
     " s -> CAST((s[1] - s[2])**2 AS BIGINT))) AS BIGINT)"
 )
 
-
-@query(
-    "ivf_pq_adc_topk",
-    oracle=f"""
-WITH base AS MATERIALIZED (
+# ``_pq_index`` and ``_pq_probed`` as CTEs, plus ``adc``: the ADC distance
+# of every non-query vector in the probed cells.
+_PQ_ADC_SQL = f"""base AS MATERIALIZED (
   SELECT vec_id,
          list_transform(CAST(embedding AS DOUBLE[]),
                         x -> CAST(round(x * 1000) AS BIGINT)) AS v
@@ -751,28 +826,32 @@ adc AS (
   WHERE a.cell IN (SELECT cell FROM probed)
     AND k.vec_id <> {_QUERY_VEC_ID}
   GROUP BY k.vec_id
-),
-exact10 AS (
-  SELECT vec_id FROM base, q
-  WHERE vec_id <> {_QUERY_VEC_ID}
-  ORDER BY {_IL2_SQL.format(a="base.v", b="q.qv")} ASC, vec_id ASC
-  LIMIT 10
-)
-SELECT row_number() OVER (ORDER BY adc_dist ASC, vec_id ASC) AS rank,
-       vec_id, adc_dist,
-       vec_id IN (SELECT vec_id FROM exact10) AS in_exact_top10
-FROM adc
-ORDER BY adc_dist ASC, vec_id ASC
-LIMIT 10
-""",
-)
-def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+)"""
 
+
+def _il2(a: Column, b: Column) -> Column:
+    """Exact integer squared L2 distance of two bigint arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda s, x: s + x,
+    )
+
+
+class _PQIndex(NamedTuple):
+    base: DataFrame  # (vec_id, v): x1000-quantized vectors
+    coarse: DataFrame  # (cid, cv): the seed centroids
+    assign: DataFrame  # (vec_id, cell): nearest coarse centroid
+    codes: DataFrame  # (vec_id, m, code): nearest sub-centroid per subspace
+    qrow: DataFrame  # (qv): the quantized query vector
+    lut: DataFrame  # (m, scid, qd): query-to-sub-centroid distances
+
+
+def _pq_index(spark: SparkSession, sf_dir: str) -> _PQIndex:
+    """The IVF-PQ index of the embeddings and the query's lookup table."""
     from f1_bigdata_pyspark_spark.operators.join_policy import as_local_dim
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    M, DSUB, SEED, NPROBE = _PQ_M, _PQ_DSUB, _PQ_SEED, _PQ_NPROBE
+    M, DSUB, SEED = _PQ_M, _PQ_DSUB, _PQ_SEED
     emb = load_table(spark, sf_dir, "embeddings")
     qcomp = F.transform(
         F.col("embedding"), lambda x: F.round(x.cast("double") * 1000).cast("long")
@@ -780,14 +859,6 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantized vectors: materialized once, read by assignment, encoding,
     # LUT, probe selection, and the exact baseline
     base = materialize(emb.select("vec_id", qcomp.alias("v")))
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda s, x: s + x,
-        )
-
     coarse = as_local_dim(
         base.filter(F.col("vec_id") < SEED).select(
             F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -798,7 +869,7 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                il2(F.col("v"), F.col("cv")).alias("d"), F.col("cid").alias("cid")
+                _il2(F.col("v"), F.col("cv")).alias("d"), F.col("cid").alias("cid")
             ).alias("dc"),
         )
         .groupBy("vec_id")
@@ -822,7 +893,7 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "m",
             F.struct(
-                il2(F.col("sv"), F.col("sc")).alias("d"),
+                _il2(F.col("sv"), F.col("sc")).alias("d"),
                 F.col("scid").alias("scid"),
             ).alias("dc"),
         )
@@ -837,35 +908,69 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         subcent.crossJoin(qrow).select(
             "m",
             "scid",
-            il2(F.slice("qv", F.col("m") * DSUB + 1, DSUB), F.col("sc")).alias(
+            _il2(F.slice("qv", F.col("m") * DSUB + 1, DSUB), F.col("sc")).alias(
                 "qd"
             ),
         )
     )
-    probed = as_local_dim(
-        coarse.crossJoin(qrow)
-        .select("cid", il2(F.col("qv"), F.col("cv")).alias("d"))
+    return _PQIndex(base, coarse, assign, codes, qrow, lut)
+
+
+def _pq_probed(pq: _PQIndex) -> DataFrame:
+    """(cid, d): the query's nprobe nearest coarse cells, nearest first."""
+    return (
+        pq.coarse.crossJoin(pq.qrow)
+        .select("cid", _il2(F.col("qv"), F.col("cv")).alias("d"))
         .orderBy("d", "cid")
-        .limit(NPROBE)
-        .select(F.col("cid").alias("cell"))
+        .limit(_PQ_NPROBE)
     )
-    cand = assign.join(F.broadcast(probed), "cell", "left_semi").filter(
-        F.col("vec_id") != _QUERY_VEC_ID
-    )
-    adc = (
-        codes.join(cand.select("vec_id"), "vec_id", "left_semi")
-        .join(
-            F.broadcast(lut),
-            ["m"],
-        )
+
+
+def _adc_dist(codes: DataFrame, lut: DataFrame) -> DataFrame:
+    """(vec_id, adc_dist): the sum of each vector's 8 LUT entries."""
+    return (
+        codes.join(F.broadcast(lut), ["m"])
         .filter(F.col("code") == F.col("scid"))
         .groupBy("vec_id")
         .agg(F.sum("qd").cast("long").alias("adc_dist"))
     )
+
+
+@query(
+    "ivf_pq_adc_topk",
+    oracle=f"""
+WITH {_PQ_ADC_SQL},
+exact10 AS (
+  SELECT vec_id FROM base, q
+  WHERE vec_id <> {_QUERY_VEC_ID}
+  ORDER BY {_IL2_SQL.format(a="base.v", b="q.qv")} ASC, vec_id ASC
+  LIMIT 10
+)
+SELECT row_number() OVER (ORDER BY adc_dist ASC, vec_id ASC) AS rank,
+       vec_id, adc_dist,
+       vec_id IN (SELECT vec_id FROM exact10) AS in_exact_top10
+FROM adc
+ORDER BY adc_dist ASC, vec_id ASC
+LIMIT 10
+""",
+)
+def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    from f1_bigdata_pyspark_spark.operators.join_policy import as_local_dim
+
+    pq = _pq_index(spark, sf_dir)
+    probed = as_local_dim(_pq_probed(pq).select(F.col("cid").alias("cell")))
+    cand = pq.assign.join(F.broadcast(probed), "cell", "left_semi").filter(
+        F.col("vec_id") != _QUERY_VEC_ID
+    )
+    adc = _adc_dist(
+        pq.codes.join(cand.select("vec_id"), "vec_id", "left_semi"), pq.lut
+    )
     exact10 = (
-        base.filter(F.col("vec_id") != _QUERY_VEC_ID)
-        .crossJoin(F.broadcast(qrow))
-        .select("vec_id", il2(F.col("v"), F.col("qv")).alias("ed"))
+        pq.base.filter(F.col("vec_id") != _QUERY_VEC_ID)
+        .crossJoin(F.broadcast(pq.qrow))
+        .select("vec_id", _il2(F.col("v"), F.col("qv")).alias("ed"))
         .orderBy("ed", "vec_id")
         .limit(10)
         .select("vec_id")
@@ -1117,8 +1222,6 @@ LIMIT 10
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from f1_bigdata_pyspark_spark.functions.vectors import cosine
-    from f1_bigdata_pyspark_spark.utils import materialize
 
     # lexical leg: the bm25_topk_retrieval scoring (same constants, same
     # association order) widened to top-50
@@ -1215,24 +1318,11 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_cell_distortion",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), best AS (
-  SELECT vec_id, centroid_id, cos_sim,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-  FROM scored
-), members AS (
+    oracle=f"""
+WITH {_IVF_ASSIGN_SQL}, members AS (
   SELECT centroid_id,
          CAST(round((1.0 - cos_sim) * 1e9) AS BIGINT) AS dq
-  FROM best WHERE rn = 1
+  FROM assign
 )
 SELECT centroid_id,
        CAST(count(*) AS BIGINT) AS n_vecs,
@@ -1244,11 +1334,8 @@ ORDER BY centroid_id
 )
 def ivf_cell_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    assigned = ivf_assign(emb, centroids)  # carries best cos as cos_sim
+    # carries best cos as cos_sim
+    assigned = ivf_assign(emb, _seed_centroids(emb))
     members = assigned.select(
         "centroid_id",
         F.round((F.lit(1.0) - F.col("cos_sim")) * 1e9).cast("long").alias(
@@ -1309,8 +1396,6 @@ def cosine_distribution_histogram(
         _emb_with_norm,
         _pair_cosine,
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     en = _emb_with_norm(emb)
     a = en.select(
@@ -1584,50 +1669,8 @@ def knn_hubness_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "kmeans_training_rounds",
-    oracle="""
-WITH e AS MATERIALIZED (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c0 AS MATERIALIZED (
-  SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16
-), a1 AS MATERIALIZED (
-  SELECT vec_id, cid, cs FROM (
-    SELECT e.vec_id, c0.cid,
-           round(list_cosine_similarity(e.v, c0.cv), 6) AS cs,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.v, c0.cv), 6) DESC,
-                        c0.cid ASC) AS rn
-    FROM e CROSS JOIN c0) WHERE rn = 1
-), x1 AS MATERIALIZED (
-  SELECT a1.cid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
-  FROM a1 JOIN e USING (vec_id)
-), c1 AS MATERIALIZED (
-  SELECT cid, list(m ORDER BY pos) AS cv FROM (
-    SELECT cid, pos, avg(val) AS m FROM x1 GROUP BY cid, pos
-  ) m1 GROUP BY cid
-), a2 AS MATERIALIZED (
-  SELECT vec_id, cid, cs FROM (
-    SELECT e.vec_id, c1.cid,
-           round(list_cosine_similarity(e.v, c1.cv), 6) AS cs,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.v, c1.cv), 6) DESC,
-                        c1.cid ASC) AS rn
-    FROM e CROSS JOIN c1) WHERE rn = 1
-), x2 AS MATERIALIZED (
-  SELECT a2.cid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS val
-  FROM a2 JOIN e USING (vec_id)
-), c2 AS MATERIALIZED (
-  SELECT cid, list(m ORDER BY pos) AS cv FROM (
-    SELECT cid, pos, avg(val) AS m FROM x2 GROUP BY cid, pos
-  ) m2 GROUP BY cid
-), a3 AS MATERIALIZED (
-  SELECT vec_id, cid, cs FROM (
-    SELECT e.vec_id, c2.cid,
-           round(list_cosine_similarity(e.v, c2.cv), 6) AS cs,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.v, c2.cv), 6) DESC,
-                        c2.cid ASC) AS rn
-    FROM e CROSS JOIN c2) WHERE rn = 1
-)
+    oracle=f"""
+WITH {_lloyd_sql(3)}
 SELECT * FROM (
   SELECT 1 AS round, CAST(count(*) AS BIGINT) AS n_vecs,
          CAST(count(DISTINCT cid) AS BIGINT) AS n_cells,
@@ -1646,10 +1689,7 @@ def kmeans_training_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.operators.similarity import kmeans_step
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cur = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    cur = _seed_centroids(emb)
     stats = []
     for r in (1, 2, 3):
         assigned = ivf_assign(emb, cur)
@@ -1836,23 +1876,7 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_nprobe_recall_curve",
     oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}),
-scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-), rankedcells AS (
+WITH {_IVF_ASSIGN_SQL}, {_QUERY_SQL}, rankedcells AS (
   SELECT c.centroid_id,
          row_number() OVER (
            ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
@@ -1895,37 +1919,20 @@ ORDER BY p.nprobe
 """,
 )
 def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_assign,
-    )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
+    centroids = _seed_centroids(emb)
     qv = _query_vec(spark, sf_dir)
     q = F.lit(qv).cast("array<double>")
     assigned = materialize(
         ivf_assign(emb, centroids).select("vec_id", "centroid_id")
     )
-    qcells_all = (
-        centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(16)
-        .collect()
-    )  # 16 rows — the ranked centroid panel, bounded by construction
+    ranked_cells = _probe_cells(centroids, q, 16)  # the whole panel
     exact10 = materialize(
         brute_force_topk(emb, qv, k=10).select("vec_id")
     )
     rows = []
     for p in (1, 2, 4):
-        probe_ids = [r["centroid_id"] for r in qcells_all[:p]]
+        probe_ids = ranked_cells[:p]
         cand = assigned.filter(F.col("centroid_id").isin(probe_ids)).select(
             "vec_id"
         )
@@ -2156,112 +2163,33 @@ def triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_indexed_topk",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), files AS (
+    oracle=_ivf_probe_top20_sql(
+        ctes="""files AS (
   SELECT CAST(count(DISTINCT centroid_id) AS BIGINT) AS n_total,
          CAST(count(DISTINCT CASE WHEN centroid_id IN
               (SELECT centroid_id FROM qcells) THEN centroid_id END)
               AS BIGINT) AS n_scanned
   FROM assign
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
+)""",
+        cols=""",
        (SELECT n_total FROM files) AS n_files_total,
-       (SELECT n_scanned FROM files) AS n_files_scanned
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       (SELECT n_scanned FROM files) AS n_files_scanned""",
+    ),
 )
 def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    # probed cells: 16-row panel ranked driver-side — bounded metadata, the
-    # planner input (like a partition predicate), not a data collect
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
-    index_rows = (
-        ivf_assign(emb, centroids)
-        .select("vec_id", "centroid_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-    )
-    root = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
+    with _scratch_dir() as root:
         table = SnapshotTable(root)
-        # the SCALE layout: hash-repartition by cell, so index writers
-        # scale with cells — each cell lands wholly in one task and the
-        # partitionBy write still emits exactly ONE file per cell dir
-        # (same file arithmetic as a single writer, n_cells the
-        # parallelism). repartition, not coalesce: coalesce would
-        # collapse the assignment window + cross-join upstream too.
-        table.commit(
-            index_rows.repartition(16, "centroid_id"), mode="append",
-            partition_by=["centroid_id"],
-        )
+        _append_cells(table, emb, centroids)
         where = [("centroid_id", "in", probe)]
         rep = table.scan_stats(where=where)
-        cells = table.read(spark, where=where)
-        out = materialize(
-            cells.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
-            .withColumn(
-                "n_files_total", F.lit(rep["n_files_total"]).cast("long")
-            )
-            .withColumn(
-                "n_files_scanned", F.lit(rep["n_files_scanned"]).cast("long")
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            _top20(table.read(spark, where=where), q),
+            n_files_total=rep["n_files_total"],
+            n_files_scanned=rep["n_files_scanned"],
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2280,71 +2208,12 @@ def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_pq_indexed_topk",
     oracle=f"""
-WITH base AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(round(x * 1000) AS BIGINT)) AS v
-  FROM embeddings
-),
-coarse AS MATERIALIZED (
-  SELECT vec_id AS cid, v AS cv FROM base WHERE vec_id < {_PQ_SEED}
-),
-assign AS MATERIALIZED (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT b.vec_id, c.cid,
-           row_number() OVER (PARTITION BY b.vec_id
-             ORDER BY {_IL2_SQL.format(a="b.v", b="c.cv")} ASC, c.cid ASC
-           ) AS rn
-    FROM base b CROSS JOIN coarse c
-  ) WHERE rn = 1
-),
-subcent AS MATERIALIZED (
-  SELECT mm.m, cid AS scid,
-         list_slice(cv, mm.m * {_PQ_DSUB} + 1, mm.m * {_PQ_DSUB} + {_PQ_DSUB}) AS sc
-  FROM coarse, (SELECT unnest(range({_PQ_M})) AS m) mm
-),
-sub AS (
-  SELECT vec_id, mm.m,
-         list_slice(v, mm.m * {_PQ_DSUB} + 1, mm.m * {_PQ_DSUB} + {_PQ_DSUB}) AS sv
-  FROM base, (SELECT unnest(range({_PQ_M})) AS m) mm
-),
-codes AS MATERIALIZED (
-  SELECT vec_id, m, scid AS code FROM (
-    SELECT s.vec_id, s.m, c.scid,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-             ORDER BY {_IL2_SQL.format(a="s.sv", b="c.sc")} ASC, c.scid ASC
-           ) AS rn
-    FROM sub s JOIN subcent c ON s.m = c.m
-  ) WHERE rn = 1
-),
-q AS (SELECT v AS qv FROM base WHERE vec_id = {_QUERY_VEC_ID}),
-lut AS MATERIALIZED (
-  SELECT c.m, c.scid,
-         {_IL2_SQL.format(
-             a=("list_slice(q.qv, c.m * %d + 1, c.m * %d + %d)"
-                % (_PQ_DSUB, _PQ_DSUB, _PQ_DSUB)),
-             b="c.sc")} AS qd
-  FROM subcent c, q
-),
-probed AS (
-  SELECT cid AS cell FROM coarse, q
-  ORDER BY {_IL2_SQL.format(a="q.qv", b="coarse.cv")} ASC, cid ASC
-  LIMIT {_PQ_NPROBE}
-),
+WITH {_PQ_ADC_SQL},
 files AS (
   SELECT CAST(count(DISTINCT cell) AS BIGINT) AS n_total,
          CAST(count(DISTINCT CASE WHEN cell IN (SELECT cell FROM probed)
               THEN cell END) AS BIGINT) AS n_scanned
   FROM assign
-),
-adc AS (
-  SELECT k.vec_id, CAST(sum(l.qd) AS BIGINT) AS adc_dist
-  FROM codes k
-  JOIN lut l ON k.m = l.m AND k.code = l.scid
-  JOIN assign a ON a.vec_id = k.vec_id
-  WHERE a.cell IN (SELECT cell FROM probed)
-    AND k.vec_id <> {_QUERY_VEC_ID}
-  GROUP BY k.vec_id
 )
 SELECT row_number() OVER (ORDER BY adc_dist ASC, vec_id ASC) AS rank,
        vec_id, adc_dist,
@@ -2356,98 +2225,16 @@ LIMIT 10
 """,
 )
 def ivf_pq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    from f1_bigdata_pyspark_spark.operators.join_policy import as_local_dim
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    M, DSUB, SEED, NPROBE = _PQ_M, _PQ_DSUB, _PQ_SEED, _PQ_NPROBE
-    emb = load_table(spark, sf_dir, "embeddings")
-    qcomp = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * 1000).cast("long"),
-    )
-    base = materialize(emb.select("vec_id", qcomp.alias("v")))
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda s, x: s + x,
-        )
-
-    coarse = as_local_dim(
-        base.filter(F.col("vec_id") < SEED).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-        )
-    )
-    assign = (
-        base.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id",
-            F.struct(
-                il2(F.col("v"), F.col("cv")).alias("d"),
-                F.col("cid").alias("cid"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cid").alias("cell"))
-    )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(M - 1))).alias("m")
-    subcent = as_local_dim(
-        base.filter(F.col("vec_id") < SEED)
-        .select(F.col("vec_id").alias("scid"), F.col("v").alias("cv"), ms)
-        .select(
-            "m", "scid", F.slice("cv", F.col("m") * DSUB + 1, DSUB).alias("sc")
-        )
-    )
-    sub = base.select("vec_id", "v", ms).select(
-        "vec_id", "m", F.slice("v", F.col("m") * DSUB + 1, DSUB).alias("sv")
-    )
-    codes = (
-        sub.join(F.broadcast(subcent), "m")
-        .select(
-            "vec_id",
-            "m",
-            F.struct(
-                il2(F.col("sv"), F.col("sc")).alias("d"),
-                F.col("scid").alias("scid"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", "m", F.col("b.scid").alias("code"))
-    )
-    qrow = base.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    lut = as_local_dim(
-        subcent.crossJoin(qrow).select(
-            "m",
-            "scid",
-            il2(
-                F.slice("qv", F.col("m") * DSUB + 1, DSUB), F.col("sc")
-            ).alias("qd"),
-        )
-    )
-    probed_cells = [
-        r.cid
-        for r in coarse.crossJoin(qrow)
-        .select("cid", il2(F.col("qv"), F.col("cv")).alias("d"))
-        .orderBy("d", "cid")
-        .limit(NPROBE)
-        .collect()
-    ]
-    index_rows = codes.join(assign, "vec_id")  # vec_id, m, code, cell
-    root = tempfile.mkdtemp(prefix="ivf_pq_index_")
-    try:
+    pq = _pq_index(spark, sf_dir)
+    probed_cells = [r.cid for r in _pq_probed(pq).collect()]
+    index_rows = pq.codes.join(pq.assign, "vec_id")  # vec_id, m, code, cell
+    with _scratch_dir() as root:
         table = SnapshotTable(root)
-        table.commit(  # per-cell writers: see ivf_indexed_topk note
+        table.commit(  # per-cell writers: see _append_cells
             index_rows.repartition(_PQ_SEED, "cell"),
             mode="append",
             partition_by=["cell"],
@@ -2457,14 +2244,9 @@ def ivf_pq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scanned = table.read(spark, where=where).filter(
             F.col("vec_id") != _QUERY_VEC_ID
         )
-        adc = (
-            scanned.join(F.broadcast(lut), ["m"])
-            .filter(F.col("code") == F.col("scid"))
-            .groupBy("vec_id")
-            .agg(F.sum("qd").cast("long").alias("adc_dist"))
-        )
+        adc = _adc_dist(scanned, pq.lut)
         w = Window.orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        out = materialize(
+        return materialize(
             adc.select(
                 F.row_number().over(w).cast("long").alias("rank"),
                 "vec_id",
@@ -2479,9 +2261,6 @@ def ivf_pq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_files_scanned", F.lit(rep["n_files_scanned"]).cast("long")
             )
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2502,30 +2281,8 @@ def ivf_pq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_index_incremental_append",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-  FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), files AS (
+    oracle=_ivf_probe_top20_sql(
+        ctes="""files AS (
   SELECT CAST(count(DISTINCT CASE WHEN vec_id < 16 OR vec_id % 5 <> 0
                    THEN centroid_id END)
             + count(DISTINCT CASE WHEN vec_id >= 16 AND vec_id % 5 = 0
@@ -2537,78 +2294,29 @@ WITH e AS (
                    AND centroid_id IN (SELECT centroid_id FROM qcells)
                    THEN centroid_id END) AS BIGINT) AS n_scanned
   FROM assign
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
+)""",
+        cols=""",
        (SELECT n_total FROM files) AS n_files_total,
-       (SELECT n_scanned FROM files) AS n_files_scanned
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       (SELECT n_scanned FROM files) AS n_files_scanned""",
+    ),
 )
 def ivf_index_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
     is_new = (F.col("vec_id") >= 16) & (F.col("vec_id") % 5 == 0)
-    root = tempfile.mkdtemp(prefix="ivf_incr_")
-    try:
+    with _scratch_dir() as root:
         table = SnapshotTable(root)
         for batch_filter in (~is_new, is_new):  # base build, then the day's
             # arrivals: ONLY this batch is assigned and written
-            rows = (
-                ivf_assign(emb.filter(batch_filter), centroids)
-                .select("vec_id", "centroid_id")
-                .join(emb.select("vec_id", "embedding"), "vec_id")
-            )
-            table.commit(  # per-cell writers: see ivf_indexed_topk note
-                rows.repartition(16, "centroid_id"), mode="append",
-                partition_by=["centroid_id"],
-            )
+            _append_cells(table, emb.filter(batch_filter), centroids)
         where = [("centroid_id", "in", probe)]
         rep = table.scan_stats(where=where)
-        cells = table.read(spark, where=where)
-        out = materialize(
-            cells.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
-            .withColumn(
-                "n_files_total", F.lit(rep["n_files_total"]).cast("long")
-            )
-            .withColumn(
-                "n_files_scanned", F.lit(rep["n_files_scanned"]).cast("long")
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            _top20(table.read(spark, where=where), q),
+            n_files_total=rep["n_files_total"],
+            n_files_scanned=rep["n_files_scanned"],
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2625,81 +2333,25 @@ def ivf_index_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_index_delete_unindex",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-  FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), files AS (
+    oracle=_ivf_probe_top20_sql(
+        ctes="""files AS (
   SELECT CAST(count(DISTINCT centroid_id) AS BIGINT) AS n_total FROM assign
-), dead AS (SELECT vec_id FROM e WHERE vec_id % 7 = 0)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
+), dead AS (SELECT vec_id FROM e WHERE vec_id % 7 = 0)""",
+        cols=""",
        (SELECT CAST(count(*) AS BIGINT) FROM dead) AS n_tombstoned,
        (SELECT n_total FROM files) AS n_files_before,
-       (SELECT n_total FROM files) AS n_files_after
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-  AND e.vec_id % 7 <> 0
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       (SELECT n_total FROM files) AS n_files_after""",
+        where="""
+  AND e.vec_id % 7 <> 0""",
+    ),
 )
 def ivf_index_delete_unindex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
-    index_rows = (
-        ivf_assign(emb, centroids)
-        .select("vec_id", "centroid_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-    )
-    root = tempfile.mkdtemp(prefix="ivf_unindex_")
-    try:
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
+    with _scratch_dir() as root:
         table = SnapshotTable(root)
-        table.commit(  # per-cell writers: see ivf_indexed_topk note
-            index_rows.repartition(16, "centroid_id"), mode="append",
-            partition_by=["centroid_id"],
-        )
+        _append_cells(table, emb, centroids)
         files_before = len(
             table._read_manifest(table.latest_version())["files"]
         )
@@ -2709,24 +2361,12 @@ def ivf_index_delete_unindex(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["vec_id"],
         )
         files_after = len(table._read_manifest(rep["version"])["files"])
-        cells = table.read(spark, where=[("centroid_id", "in", probe)])
-        out = materialize(
-            cells.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
-            .withColumn(
-                "n_tombstoned", F.lit(rep["n_tombstoned"]).cast("long")
-            )
-            .withColumn("n_files_before", F.lit(files_before).cast("long"))
-            .withColumn("n_files_after", F.lit(files_after).cast("long"))
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            _top20(table.read(spark, where=[("centroid_id", "in", probe)]), q),
+            n_tombstoned=rep["n_tombstoned"],
+            n_files_before=files_before,
+            n_files_after=files_after,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2749,30 +2389,8 @@ def ivf_index_delete_unindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_hot_cell_split_rebalance",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), hot AS (
+    oracle=_ivf_probe_top20_sql(
+        ctes="""hot AS (
   SELECT centroid_id AS hc FROM assign
   GROUP BY centroid_id ORDER BY count(*) DESC, centroid_id ASC LIMIT 1
 ), hm AS (
@@ -2798,8 +2416,8 @@ files AS (
               (SELECT centroid_id FROM qcells) THEN centroid_id END)
               AS BIGINT) AS n_scanned
   FROM assign
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
+)""",
+        cols=""",
        (SELECT n_total FROM files) AS n_files_before,
        (SELECT n_total - 1 + (SELECT ns FROM nsub) FROM files)
          AS n_files_after,
@@ -2812,42 +2430,15 @@ SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
        (SELECT n_total - 1 FROM files) AS n_files_carried,
        (SELECT CAST(ns AS BIGINT) FROM nsub) AS n_files_written,
        (SELECT CAST(hc AS BIGINT) FROM hot) AS hot_cell,
-       TRUE AS search_equal
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       TRUE AS search_equal""",
+    ),
 )
 def ivf_hot_cell_split_rebalance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from f1_bigdata_pyspark_spark.operators.similarity import ivf_assign
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
     assign = materialize(
         ivf_assign(emb, centroids).select("vec_id", "centroid_id")
     )
@@ -2857,8 +2448,7 @@ def ivf_hot_cell_split_rebalance(
         F.lit(0).cast("long").alias("subcell"),
         "embedding",
     )
-    root = tempfile.mkdtemp(prefix="ivf_split_")
-    try:
+    with _scratch_dir() as root:
         table = SnapshotTable(root)
         table.commit(  # two-level layout from day one: (cell, subcell=0)
             index_rows.repartition(16, "centroid_id"),
@@ -2904,47 +2494,25 @@ def ivf_hot_cell_split_rebalance(
             [("centroid_id", "=", hot)],
         )
         rep1 = table.scan_stats(version=rep["version"], where=where)
-        topk = lambda df: (  # noqa: E731
-            df.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
+        pre = _top20(table.read(spark, version=0, where=where), q).collect()
+        post_df = _top20(
+            table.read(spark, version=rep["version"], where=where), q
         )
-        pre = topk(table.read(spark, version=0, where=where)).collect()
-        post_df = topk(table.read(spark, version=rep["version"], where=where))
         post = post_df.collect()
         search_equal = [  # bounded 20-row comparison, computed not assumed
             (r.vec_id, r.cos_sim) for r in pre
         ] == [(r.vec_id, r.cos_sim) for r in post]
-        out = materialize(
-            post_df.withColumn(
-                "n_files_before", F.lit(rep0["n_files_total"]).cast("long")
-            )
-            .withColumn(
-                "n_files_after", F.lit(rep1["n_files_total"]).cast("long")
-            )
-            .withColumn(
-                "n_files_scanned_after",
-                F.lit(rep1["n_files_scanned"]).cast("long"),
-            )
-            .withColumn(
-                "n_files_replaced", F.lit(rep["files_replaced"]).cast("long")
-            )
-            .withColumn(
-                "n_files_carried", F.lit(rep["files_carried"]).cast("long")
-            )
-            .withColumn(
-                "n_files_written", F.lit(rep["files_written"]).cast("long")
-            )
-            .withColumn("hot_cell", F.lit(hot).cast("long"))
-            .withColumn("search_equal", F.lit(search_equal))
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            post_df,
+            n_files_before=rep0["n_files_total"],
+            n_files_after=rep1["n_files_total"],
+            n_files_scanned_after=rep1["n_files_scanned"],
+            n_files_replaced=rep["files_replaced"],
+            n_files_carried=rep["files_carried"],
+            n_files_written=rep["files_written"],
+            hot_cell=hot,
+            search_equal=search_equal,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -2964,30 +2532,8 @@ def ivf_hot_cell_split_rebalance(
 # --------------------------------------------------------------------------
 @query(
     "ivf_index_cdc_maintenance",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), files AS (
+    oracle=_ivf_probe_top20_sql(
+        ctes="""files AS (
   SELECT CAST(count(DISTINCT CAST(vec_id % 3 AS VARCHAR) || '-' ||
               CAST(centroid_id AS VARCHAR)) AS BIGINT) AS n_total,
          CAST(count(DISTINCT CASE WHEN centroid_id IN
@@ -2995,51 +2541,25 @@ WITH e AS (
               THEN CAST(vec_id % 3 AS VARCHAR) || '-' ||
                    CAST(centroid_id AS VARCHAR) END) AS BIGINT) AS n_scanned
   FROM assign
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
+)""",
+        cols=""",
        (SELECT n_total FROM files) AS n_files_total,
        (SELECT n_scanned FROM files) AS n_files_scanned,
        CAST(3 AS BIGINT) AS n_feed_polls,
-       TRUE AS index_equals_full_build
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       TRUE AS index_equals_full_build""",
+    ),
 )
 def ivf_index_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    import os
 
     from f1_bigdata_pyspark_spark.sources.snapshots import (
         SnapshotTable,
         read_changes_since,
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
+    from f1_bigdata_pyspark_spark.utils import multisets_equal
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
-    tmp = tempfile.mkdtemp(prefix="ivf_cdc_")
-    try:
-        import os
-
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
+    with _scratch_dir() as tmp:
         corpus = SnapshotTable(os.path.join(tmp, "corpus"))
         index = SnapshotTable(os.path.join(tmp, "index"))
         cursor = None
@@ -3053,49 +2573,24 @@ def ivf_index_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the delta into the index (same partitioning: O(new data))
             delta, cursor = read_changes_since(spark, corpus, cursor)
             polls += 1
-            rows = (
-                ivf_assign(delta, centroids)
-                .select("vec_id", "centroid_id")
-                .join(delta.select("vec_id", "embedding"), "vec_id")
-            )
-            index.commit(
-                rows.repartition(16, "centroid_id"),
-                mode="append",
-                partition_by=["centroid_id"],
-            )
+            _append_cells(index, delta, centroids)
         # the feed-built index content == a from-scratch full assignment.
         # r12: ONE signed-union job (utils.multisets_equal) — the two
         # anti-join counts each re-evaluated the full-corpus ivf_assign
         # (cross-score + per-vector window), the expensive subtree here,
         # so the check cost 2× the assignment. Now each side runs once.
-        from f1_bigdata_pyspark_spark.utils import multisets_equal
-
         full = ivf_assign(emb, centroids).select("vec_id", "centroid_id")
         built = index.read(spark).select("vec_id", "centroid_id")
         eq = multisets_equal(built, full)
         where = [("centroid_id", "in", probe)]
         rep = index.scan_stats(where=where)
-        cells = index.read(spark, where=where)
-        out = materialize(
-            cells.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
-            .withColumn(
-                "n_files_total", F.lit(rep["n_files_total"]).cast("long")
-            )
-            .withColumn(
-                "n_files_scanned", F.lit(rep["n_files_scanned"]).cast("long")
-            )
-            .withColumn("n_feed_polls", F.lit(polls).cast("long"))
-            .withColumn("index_equals_full_build", F.lit(eq))
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            _top20(index.read(spark, where=where), q),
+            n_files_total=rep["n_files_total"],
+            n_files_scanned=rep["n_files_scanned"],
+            n_feed_polls=polls,
+            index_equals_full_build=eq,
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -3117,85 +2612,37 @@ def ivf_index_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ivf_index_cdc_across_deletes",
-    oracle=f"""
-WITH e0 AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), mm AS (SELECT CAST(max(vec_id) AS BIGINT) AS m FROM e0),
-e AS (
-  SELECT * FROM e0
-  WHERE NOT (vec_id >= (SELECT m // 4 FROM mm)
-             AND vec_id < (SELECT m // 2 FROM mm))
-), c AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e0 WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, c.centroid_id,
-         round(list_cosine_similarity(e.v, c.cv), 6) AS cos_sim
-  FROM e CROSS JOIN c
-), assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT vec_id, centroid_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos_sim DESC, centroid_id ASC) AS rn
-    FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e0 WHERE vec_id = {_QUERY_VEC_ID}
-), qcells AS (
-  SELECT c.centroid_id
-  FROM c CROSS JOIN q
-  ORDER BY round(list_cosine_similarity(c.cv, q.qv), 6) DESC,
-           c.centroid_id ASC
-  LIMIT 2
-), ctr AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_ins,
-         (SELECT CAST(count(*) AS BIGINT) FROM e0
-          WHERE vec_id >= (SELECT m // 4 FROM mm)
-            AND vec_id < (SELECT m // 2 FROM mm)) AS n_del
-)
-SELECT e.vec_id, round(list_cosine_similarity(e.v, q.qv), 6) AS cos_sim,
-       (SELECT n_ins FROM ctr) AS n_insert_rows,
-       (SELECT n_del FROM ctr) AS n_delete_rows,
+    # assignment is per vector, so assigning the whole corpus and dropping
+    # the deleted range afterwards equals assigning the live rows only
+    oracle=_ivf_probe_top20_sql(
+        ctes="""mm AS (SELECT CAST(max(vec_id) AS BIGINT) AS m FROM e),
+dead AS (
+  SELECT vec_id FROM e
+  WHERE vec_id >= (SELECT m // 4 FROM mm)
+    AND vec_id < (SELECT m // 2 FROM mm)
+)""",
+        cols=""",
+       (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_insert_rows,
+       (SELECT CAST(count(*) AS BIGINT) FROM dead) AS n_delete_rows,
        CAST(3 AS BIGINT) AS n_feed_polls,
-       TRUE AS index_equals_full_build
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-CROSS JOIN q
-WHERE a.centroid_id IN (SELECT centroid_id FROM qcells)
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 20
-""",
+       TRUE AS index_equals_full_build""",
+        where="""
+  AND e.vec_id NOT IN (SELECT vec_id FROM dead)""",
+    ),
 )
 def ivf_index_cdc_across_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from f1_bigdata_pyspark_spark.sources.snapshots import (
         SnapshotTable,
         read_row_changes_since,
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
+    from f1_bigdata_pyspark_spark.utils import multisets_equal
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
     m = emb.agg(F.max("vec_id")).head()[0]
     d_lo, d_hi = m // 4, m // 2
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid"),
-    )
-    qv = _query_vec(spark, sf_dir)
-    q = F.lit(qv).cast("array<double>")
-    probe = [
-        r.centroid_id
-        for r in centroids.select(
-            "centroid_id",
-            F.round(cosine(F.col("centroid"), q), 6).alias("qc"),
-        )
-        .orderBy(F.col("qc").desc(), F.col("centroid_id").asc())
-        .limit(2)
-        .collect()
-    ]
-    tmp = tempfile.mkdtemp(prefix="ivf_cdf_del_")
-    try:
+    with _scratch_dir() as tmp:
         corpus = SnapshotTable(os.path.join(tmp, "corpus"))
         index = SnapshotTable(os.path.join(tmp, "index"))
         cursor = None
@@ -3223,16 +2670,7 @@ def ivf_index_cdc_across_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ins = feed.filter(
                     F.col("_change_type").isin("insert", "update_postimage")
                 ).select("vec_id", "embedding")
-                rows = (
-                    ivf_assign(ins, centroids)
-                    .select("vec_id", "centroid_id")
-                    .join(ins, "vec_id")
-                )
-                index.commit(
-                    rows.repartition(4, "centroid_id"),
-                    mode="append",
-                    partition_by=["centroid_id"],
-                )
+                _append_cells(index, ins, centroids, writers=4)
             if d:
                 index.delete_keys(
                     spark,
@@ -3263,23 +2701,11 @@ def ivf_index_cdc_across_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # r12: ONE signed-union job (see ivf_index_cdc_maintenance) —
         # the anti-join pair evaluated the full ivf_assign twice.
-        from f1_bigdata_pyspark_spark.utils import multisets_equal
-
         eq = multisets_equal(built, full)
-        cells = index.read(spark, where=[("centroid_id", "in", probe)])
-        out = materialize(
-            cells.select(
-                "vec_id",
-                F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(20)
-            .withColumn("n_insert_rows", F.lit(n_ins).cast("long"))
-            .withColumn("n_delete_rows", F.lit(n_del).cast("long"))
-            .withColumn("n_feed_polls", F.lit(polls).cast("long"))
-            .withColumn("index_equals_full_build", F.lit(eq))
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        return _with_stats(
+            _top20(index.read(spark, where=[("centroid_id", "in", probe)]), q),
+            n_insert_rows=n_ins,
+            n_delete_rows=n_del,
+            n_feed_polls=polls,
+            index_equals_full_build=eq,
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out

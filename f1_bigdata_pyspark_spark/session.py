@@ -21,6 +21,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "f1-bigdata-pyspark-spark"
 
+# the directory holding the package: what a Python worker needs on its
+# path to import it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def env_cpus() -> int:
     """CPU count for local mode, from the driver's env contract."""
@@ -65,4 +69,18 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    put_package_on_worker_path(spark)
     return spark
+
+
+def put_package_on_worker_path(spark: SparkSession) -> None:
+    """Let the Python workers Spark starts (UDFs, Python data sources)
+    import this package whatever the driver's working directory and
+    ``PYTHONPATH``: a driver-side ``sys.path`` entry does not reach them.
+    Spark merges the ``PYTHONPATH`` of ``SparkContext.environment`` into
+    a worker's path, and a function captures that environment when it is
+    wrapped, so this must run before the functions are built."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])

@@ -2236,10 +2236,18 @@ def register(spark) -> None:
     save/restore or flip the conf around their scans, so register() must
     re-establish it every call — guarding both broke 7 served faces in
     the driver-sim (the face that restored "false" stuck for the rest of
-    the session)."""
+    the session).
+
+    The data-source workers import this package, so the package root goes
+    on their path first: a session the caller built itself (not through
+    ``session.get_spark``) would otherwise fail every scan with
+    ``ModuleNotFoundError`` when the driver runs outside the checkout."""
+    from f1_bigdata_pyspark_spark.session import put_package_on_worker_path
+
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     if getattr(spark, "_snapshot_source_registered", False):
         return
+    put_package_on_worker_path(spark)
     spark.dataSource.register(SnapshotDataSource)
     spark._snapshot_source_registered = True
 

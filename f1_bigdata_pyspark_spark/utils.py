@@ -45,10 +45,22 @@ def multisets_equal(a: DataFrame, b: DataFrame) -> bool:
     every per-row sum is zero iff the multisets are equal, the identical
     A∖B=∅ ∧ B∖A=∅ test the previous two-exceptAll-count pattern ran as
     FOUR side evaluations (each except leg re-evaluates both inputs).
-    One evaluation of each side, one exchange on the row value."""
+    One evaluation of each side, one exchange on the row value.
+
+    Raises ValueError when the two frames' column sets differ (aligning
+    them would silently drop columns of ``b``) or when either frame has a
+    column named like the probe's own ``__sgn`` / ``__d``."""
     from pyspark.sql import functions as F
 
     cols = a.columns
+    if sorted(cols) != sorted(b.columns):
+        raise ValueError(
+            "multisets_equal: column sets differ: "
+            f"{sorted(cols)} vs {sorted(b.columns)}"
+        )
+    clash = {"__sgn", "__d"} & set(cols)
+    if clash:
+        raise ValueError(f"multisets_equal: reserved column names {sorted(clash)}")
     d = (
         a.withColumn("__sgn", F.lit(1))
         .unionAll(b.select(*cols).withColumn("__sgn", F.lit(-1)))

@@ -1193,3 +1193,25 @@ def test_multisets_equal_probe(spark):
     n = [(None, None), (1, "a")]
     assert multisets_equal(df(n), df(list(reversed(n))))
     assert not multisets_equal(df(n), df([(1, "a")]))
+
+
+def test_multisets_equal_refuses_what_it_cannot_compare(spark):
+    """The probe fails loudly instead of answering a different question:
+    a column only one side has would be dropped by the column alignment
+    (so differing frames compared equal), and a column named like the
+    probe's own sign/difference columns would be overwritten."""
+    import pytest
+
+    from f1_bigdata_pyspark_spark.utils import multisets_equal
+
+    a = spark.createDataFrame([(1, "a")], "k long, v string")
+    with pytest.raises(ValueError, match="column sets differ"):
+        multisets_equal(a, a.withColumn("extra", a.k * 2))
+    with pytest.raises(ValueError, match="column sets differ"):
+        multisets_equal(a.withColumn("extra", a.k * 2), a)
+    for name in ("__sgn", "__d"):
+        s = a.withColumn(name, a.k)
+        with pytest.raises(ValueError, match="reserved column names"):
+            multisets_equal(s, s)
+    # same columns in another order are still compared by name
+    assert multisets_equal(a, a.select("v", "k"))

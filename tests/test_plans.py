@@ -623,47 +623,66 @@ _BOUNDING_OPS = (
 )
 
 
+def _unbounded_global_windows(plan: str):
+    """Walk one formatted plan for unpartitioned Window operators. Returns
+    (offenders, unresolved): the windows with no bounding operator below
+    them in their own plan section, as (op_id, first subtree operators),
+    and the ids of Window detail chunks with no node in the parsed tree —
+    windows the walk cannot see below."""
+    offenders, unresolved = [], []
+    for tree, details in _plan_sections(plan):
+        by_id = {op_id: (depth, opname) for depth, opname, op_id in tree}
+        order = [op_id for _, _, op_id in tree]
+        for op_id, chunk in details.items():
+            if not chunk.startswith(f"({op_id}) Window"):
+                continue
+            if not _unpartitioned_window_specs(chunk):
+                continue
+            if op_id not in by_id:
+                unresolved.append(op_id)
+                continue
+            depth = by_id[op_id][0]
+            idx = order.index(op_id)
+            subtree = []
+            for d2, opname2, id2 in tree[idx + 1:]:
+                if d2 <= depth:
+                    break
+                subtree.append(opname2)
+            if not any(s.startswith(b) for s in subtree for b in _BOUNDING_OPS):
+                offenders.append((op_id, subtree[:6]))
+    return offenders, unresolved
+
+
 def test_unpartitioned_windows_sit_above_bounded_input(all_query_plans):
     """STRUCTURAL pin for the allowlist above: every Window operator whose
     spec has no partition key must have a bounding operator (aggregate,
     limit, local relation) somewhere BELOW it in its own plan section —
     the 'post-aggregate / bounded input' claim checked against the tree,
     not just the docstring. Exceptions with plan-invisible bounds are
-    named in _GLOBAL_WINDOW_UNAGG_OK."""
-    offenders = {}
+    named in _GLOBAL_WINDOW_UNAGG_OK. Fails closed: a Window the tree
+    parse cannot place fails the audit instead of being skipped."""
+    offenders, unresolved = {}, {}
     for name, plan in all_query_plans.items():
         if name in _GLOBAL_WINDOW_UNAGG_OK:
             continue
-        for tree, details in _plan_sections(plan):
-            by_id = {op_id: (depth, opname) for depth, opname, op_id in tree}
-            order = [op_id for _, _, op_id in tree]
-            for op_id, chunk in details.items():
-                if not chunk.startswith(f"({op_id}) Window"):
-                    continue
-                if not _unpartitioned_window_specs(chunk):
-                    continue
-                if op_id not in by_id:
-                    continue
-                depth = by_id[op_id][0]
-                idx = order.index(op_id)
-                subtree = []
-                for d2, opname2, id2 in tree[idx + 1:]:
-                    if d2 <= depth:
-                        break
-                    subtree.append(opname2)
-                if not any(
-                    s.startswith(b) for s in subtree for b in _BOUNDING_OPS
-                ):
-                    offenders.setdefault(name, []).append(
-                        (op_id, subtree[:6])
-                    )
+        bad, blind = _unbounded_global_windows(plan)
+        if bad:
+            offenders[name] = bad
+        if blind:
+            unresolved[name] = blind
+    assert not unresolved, (
+        f"Window operators missing from the parsed plan tree: {unresolved}"
+    )
     assert not offenders, f"global windows over unbounded input: {offenders}"
 
 
 def test_unpartitioned_window_structural_detector_not_vacuous(spark, sf_smoke):
     """The structural walk must actually flag a global window over a raw
     scan (no aggregate below) — proving the tree parse, the per-operator
-    spec check, and the subtree scan all engage."""
+    spec check, and the subtree scan all engage — and must report, not
+    skip, a Window whose tree node it cannot parse."""
+    import re
+
     from pyspark.sql import Window
 
     from pyspark.sql import functions as F
@@ -675,23 +694,11 @@ def test_unpartitioned_window_structural_detector_not_vacuous(spark, sf_smoke):
         "rk", F.row_number().over(Window.orderBy("l_orderkey"))
     )
     plan = formatted_plan(bad)
-    hits = []
-    for tree, details in _plan_sections(plan):
-        by_id = {op_id: (depth, opname) for depth, opname, op_id in tree}
-        order = [op_id for _, _, op_id in tree]
-        for op_id, chunk in details.items():
-            if chunk.startswith(f"({op_id}) Window") and (
-                _unpartitioned_window_specs(chunk)
-            ):
-                depth = by_id[op_id][0]
-                idx = order.index(op_id)
-                subtree = [
-                    opname2
-                    for d2, opname2, _ in tree[idx + 1:]
-                    if d2 > depth
-                ]
-                if not any(
-                    s.startswith(b) for s in subtree for b in _BOUNDING_OPS
-                ):
-                    hits.append(op_id)
-    assert hits, plan
+    hits, unresolved = _unbounded_global_windows(plan)
+    assert hits and not unresolved, plan
+    # the same plan with the Window's tree line unparseable
+    blind_plan, n = re.subn(
+        r"(?m)^([ :+\-]*(?:\* )?)Window \((\d+)\)$", r"\1Window #\2", plan
+    )
+    assert n == 1, plan
+    assert _unbounded_global_windows(blind_plan) == ([], [hits[0][0]])

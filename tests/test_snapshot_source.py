@@ -1613,3 +1613,46 @@ def test_simple_reader_refuses_oversized_admitted_batch(spark, tmp_path):
     r2 = SnapshotSimpleStreamReader(t.root, schema, 5, None, 10 << 20)
     rows, off = r2.read({"version": -1})
     assert len(list(rows)) == 2000 and off == {"version": 0}
+
+
+_FROM_ANOTHER_CWD = """
+import sys
+root, sf_dir = sys.argv[1:3]
+sys.path.insert(0, root)  # the driver's own import path, as __spark_entry__
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .getOrCreate()
+)
+import f1_bigdata_pyspark_spark.queries  # noqa: F401  (registers the faces)
+from f1_bigdata_pyspark_spark.queries.registry import _REGISTRY
+rows = _REGISTRY["snapshot_served_dv_scan"].fn(spark, sf_dir).collect()
+print("served rows:", len(rows))
+spark.stop()
+"""
+
+
+def test_served_query_runs_from_another_cwd(sf_smoke, tmp_path):
+    """A driver outside the checkout, with no PYTHONPATH and a session it
+    built itself, still serves ``format("snapshot")`` queries: the Python
+    data-source workers cannot see the driver's ``sys.path`` entry, so
+    ``register()`` puts the package root on their path."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", _FROM_ANOTHER_CWD, root, sf_smoke],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-4000:]
+    assert "served rows: " in done.stdout, done.stdout[-2000:]
+    assert int(done.stdout.split("served rows: ")[1].split()[0]) > 0
