@@ -155,6 +155,9 @@ class FastF1LapsDataSource(DataSource):
 
 
 def register(spark) -> None:
+    from f1_bigdata_pyspark_spark.session import set_up_workers
+
+    set_up_workers(spark)
     spark.dataSource.register(FastF1LapsDataSource)
 
 

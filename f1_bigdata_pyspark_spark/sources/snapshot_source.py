@@ -2242,12 +2242,12 @@ def register(spark) -> None:
     on their path first: a session the caller built itself (not through
     ``session.get_spark``) would otherwise fail every scan with
     ``ModuleNotFoundError`` when the driver runs outside the checkout."""
-    from f1_bigdata_pyspark_spark.session import put_package_on_worker_path
+    from f1_bigdata_pyspark_spark.session import set_up_workers
 
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     if getattr(spark, "_snapshot_source_registered", False):
         return
-    put_package_on_worker_path(spark)
+    set_up_workers(spark)
     spark.dataSource.register(SnapshotDataSource)
     spark._snapshot_source_registered = True
 
@@ -2272,6 +2272,20 @@ def _collect_plan_refs(jplan, refs: set) -> None:
     _walk(jplan)
 
 
+def _schema_stand_in(spark, root: str, options: dict):
+    """An empty frame with the schema ``format("snapshot")`` serves for
+    ``root`` and ``options``, from ``SnapshotDataSource.schema()`` run in
+    the driver: analyzing a plan over it needs no data-source worker round
+    trip, where each ``load()`` (and each size estimate over one) pays
+    one."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+    from pyspark.sql.utils import to_str
+
+    opts = {k: to_str(v) for k, v in options.items()}
+    source = SnapshotDataSource(CaseInsensitiveDict(root=root, **opts))
+    return spark.createDataFrame([], source.schema())
+
+
 def served_read(spark, root: str, build, **options):
     """Projection-PRUNED served scan (round 9): Spark 4.1's Python
     DataSource API has no pruneColumns engine hook (traced in round 8),
@@ -2279,44 +2293,48 @@ def served_read(spark, root: str, build, **options):
     hand-passes the ``columns`` option. This helper derives it from the
     query itself, so served reads stop paying full width BY DEFAULT:
 
-    1. plan ``build(scan)`` once against the full-width scan — nothing
-       executes; only the ANALYZED logical plan is inspected,
+    1. plan ``build`` once against an empty stand-in with the table's
+       served schema (``_schema_stand_in``) — nothing executes; only the
+       ANALYZED logical plan is inspected,
     2. walk that plan's nodes collecting every referenced attribute
        name (filters, join keys, aggregates — not just the output, so a
        filter-only column is kept),
-    3. re-plan ``build`` against a fresh scan carrying
+    3. plan ``build`` against the real scan, carrying
        ``columns=<referenced ∩ table columns>`` — the executor read
        then fetches only those byte ranges (parquet is columnar).
 
     ``build`` must be a PURE plan constructor (DataFrame -> DataFrame):
-    it runs twice. Columns the plan never references are dropped; a
-    query referencing every column (or none the table knows) serves
-    full width unchanged. Extra ``options`` pass through to both scans
-    (version/timestampAsOf time travel composes). An explicit
-    ``columns`` option wins — the caller's narrowing is already the
-    contract."""
-    reader = spark.read.format("snapshot").option("root", root)
-    for k, v in options.items():
-        reader = reader.option(k, v)
+    it runs twice, the first time over no rows. Columns the plan never
+    references are dropped; a query referencing every column (or none
+    the table knows) serves full width unchanged. Extra ``options`` pass
+    through to both scans (version/timestampAsOf time travel composes).
+    An explicit ``columns`` option wins — the caller's narrowing is
+    already the contract."""
+
+    def scan(**extra):
+        return (
+            spark.read.format("snapshot")
+            .option("root", root)
+            .options(**options, **extra)
+            .load()
+        )
+
     if "columns" in options:
-        return build(reader.load())
-    full = reader.load()
-    table_cols = set(full.columns)
-    planned = build(full)
+        return build(scan())
+    stand_in = _schema_stand_in(spark, root, options)
     refs: set[str] = set()
-    _collect_plan_refs(planned._jdf.queryExecution().analyzed(), refs)
+    _collect_plan_refs(build(stand_in)._jdf.queryExecution().analyzed(), refs)
     # committed order, so the derived option is deterministic
-    need = [c for c in full.columns if c in refs]
-    if not need or len(need) == len(table_cols):
-        return planned  # full width (or nothing derivable): as planned
+    need = [c for c in stand_in.columns if c in refs]
+    if not need or len(need) == len(stand_in.columns):
+        return build(scan())  # full width (or nothing derivable)
     try:
-        narrowed = reader.option("columns", ",".join(need)).load()
-        return build(narrowed)
+        return build(scan(columns=",".join(need)))
     except Exception:
         # a reference the walk could not see (exotic expression shape):
         # losing the pruning is an efficiency miss, breaking a pure
         # caller at analysis would be a contract miss — serve full width
-        return planned
+        return build(scan())
 
 
 def served_read_tables(spark, roots: dict, build, report: dict | None = None):
@@ -2329,22 +2347,23 @@ def served_read_tables(spark, roots: dict, build, report: dict | None = None):
     kept on both (over-keeping is the sound direction — star-schema
     column names are naturally disjoint). ``report`` (optional dict) is
     filled with ``{name: (n_columns_read, n_columns_total)}`` so a
-    caller can pin the width arithmetic."""
-    fulls = {
-        n: spark.read.format("snapshot").option("root", r).load()
-        for n, r in roots.items()
-    }
-    planned = build(fulls)
+    caller can pin the width arithmetic. The derivation pass plans over
+    empty stand-ins, as in ``served_read``."""
+    stand_ins = {n: _schema_stand_in(spark, r, {}) for n, r in roots.items()}
     refs: set[str] = set()
-    _collect_plan_refs(planned._jdf.queryExecution().analyzed(), refs)
+    _collect_plan_refs(build(stand_ins)._jdf.queryExecution().analyzed(), refs)
+
+    def full(r):
+        return spark.read.format("snapshot").option("root", r).load()
+
     narrowed = {}
     for n, r in roots.items():
-        cols = fulls[n].columns
+        cols = stand_ins[n].columns
         need = [c for c in cols if c in refs]
         if report is not None:
             report[n] = (len(need) if need else len(cols), len(cols))
         if not need or len(need) == len(cols):
-            narrowed[n] = fulls[n]
+            narrowed[n] = full(r)
             continue
         narrowed[n] = (
             spark.read.format("snapshot")
@@ -2358,6 +2377,7 @@ def served_read_tables(spark, roots: dict, build, report: dict | None = None):
         # same fallback as served_read: never break a pure caller over
         # a reference the plan walk could not see
         if report is not None:
-            for n, r in roots.items():
-                report[n] = (len(fulls[n].columns), len(fulls[n].columns))
-        return planned
+            for n in roots:
+                width = len(stand_ins[n].columns)
+                report[n] = (width, width)
+        return build({n: full(r) for n, r in roots.items()})

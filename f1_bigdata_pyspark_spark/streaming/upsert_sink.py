@@ -6,11 +6,13 @@ sink: every micro-batch merges into the parquet target through
 are no-ops per key.
 
 Scale notes: the merge window partitions by the upsert key (state bounded
-per key). The read-merge-overwrite cycle materializes the merged table
-before overwriting (the overwrite would otherwise destroy its own lazy
-input); on a real deployment this whole sink is one Delta/Iceberg
-``MERGE INTO`` per micro-batch with no materialize step — semantics
-identical.
+per key). Each micro-batch lists the table's data files, appends the
+keep-latest merge of exactly those files and the batch as new files, and
+only then deletes the listed files: a failed write leaves the table as it
+was, and a failed delete leaves old and merged rows side by side until the
+replayed batch merges them again (readers in that window see both). On a
+real deployment this whole sink is one Delta/Iceberg ``MERGE INTO`` per
+micro-batch, atomic to readers — semantics identical.
 """
 
 from __future__ import annotations
@@ -21,7 +23,34 @@ from f1_bigdata_pyspark_spark.sources.parquet import (
     assert_unique_key,
     upsert_keep_latest,
 )
-from f1_bigdata_pyspark_spark.utils import fs_path_exists, materialize
+
+
+def _data_files(spark, target_dir: str) -> list[str]:
+    """The table's data files, through the Hadoop FS API (scheme-aware: an
+    ``os`` listing sees only the driver's local disk, and would read an
+    hdfs/s3 table as empty). Names starting with ``_`` or ``.`` are
+    Spark's markers and checksums, not data."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(target_dir)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return []
+    return [
+        st.getPath().toString()
+        for st in fs.listStatus(hpath)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+def _delete_files(spark, paths: list[str]) -> None:
+    """Delete exactly ``paths``; one that cannot be deleted fails the
+    micro-batch, and its replay merges the leftovers again."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for p in paths:
+        hpath = jvm.org.apache.hadoop.fs.Path(p)
+        if not hpath.getFileSystem(conf).delete(hpath, False):
+            raise OSError(f"could not delete {p}")
 
 
 def foreach_batch_upsert(target_dir: str, key_cols: list[str], recency_col: str):
@@ -31,21 +60,14 @@ def foreach_batch_upsert(target_dir: str, key_cols: list[str], recency_col: str)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # EXPLICIT existence probe through the Hadoop FS API (scheme-aware:
-        # an os.path probe is driver-local only and reads False forever on
-        # hdfs/s3 targets, turning EVERY batch into "first batch" — the
-        # overwrite below would then replace the WHOLE accumulated table
-        # with one micro-batch). A bare except would be wrong the other
-        # way: transient read errors must fail the epoch, not truncate.
-        existing = (
-            spark.read.parquet(target_dir)
-            if fs_path_exists(spark, target_dir)
-            else None
-        )
-        merged = materialize(
-            upsert_keep_latest(existing, batch_df, key_cols, recency_col)
-        )
-        merged.write.mode("overwrite").parquet(target_dir)
+        # the merge reads exactly the listed files, so the files it appends
+        # are not its own input
+        old = _data_files(spark, target_dir)
+        existing = spark.read.parquet(*old) if old else None
+        upsert_keep_latest(existing, batch_df, key_cols, recency_col).write.mode(
+            "append"
+        ).parquet(target_dir)
+        _delete_files(spark, old)
         assert_unique_key(spark.read.parquet(target_dir), key_cols)
 
     return apply

@@ -1617,7 +1617,7 @@ def test_simple_reader_refuses_oversized_admitted_batch(spark, tmp_path):
 
 _FROM_ANOTHER_CWD = """
 import sys
-root, sf_dir = sys.argv[1:3]
+root, sf_dir, name = sys.argv[1:4]
 sys.path.insert(0, root)  # the driver's own import path, as __spark_entry__
 from pyspark.sql import SparkSession
 spark = (
@@ -1628,17 +1628,15 @@ spark = (
 )
 import f1_bigdata_pyspark_spark.queries  # noqa: F401  (registers the faces)
 from f1_bigdata_pyspark_spark.queries.registry import _REGISTRY
-rows = _REGISTRY["snapshot_served_dv_scan"].fn(spark, sf_dir).collect()
+rows = _REGISTRY[name].fn(spark, sf_dir).collect()
 print("served rows:", len(rows))
 spark.stop()
 """
 
 
-def test_served_query_runs_from_another_cwd(sf_smoke, tmp_path):
-    """A driver outside the checkout, with no PYTHONPATH and a session it
-    built itself, still serves ``format("snapshot")`` queries: the Python
-    data-source workers cannot see the driver's ``sys.path`` entry, so
-    ``register()`` puts the package root on their path."""
+def _run_from_another_cwd(name, sf_dir, cwd):
+    """Run registered query ``name`` in a fresh driver at ``cwd`` with
+    ``PYTHONPATH`` unset, on a session that driver builds itself."""
     import os
     import subprocess
     import sys
@@ -1646,8 +1644,8 @@ def test_served_query_runs_from_another_cwd(sf_smoke, tmp_path):
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     done = subprocess.run(
-        [sys.executable, "-c", _FROM_ANOTHER_CWD, root, sf_smoke],
-        cwd=tmp_path,
+        [sys.executable, "-c", _FROM_ANOTHER_CWD, root, sf_dir, name],
+        cwd=cwd,
         env=env,
         capture_output=True,
         text=True,
@@ -1656,3 +1654,18 @@ def test_served_query_runs_from_another_cwd(sf_smoke, tmp_path):
     assert done.returncode == 0, done.stderr[-4000:]
     assert "served rows: " in done.stdout, done.stdout[-2000:]
     assert int(done.stdout.split("served rows: ")[1].split()[0]) > 0
+
+
+def test_served_query_runs_from_another_cwd(sf_smoke, tmp_path):
+    """A driver outside the checkout, with no PYTHONPATH and a session it
+    built itself, still serves ``format("snapshot")`` queries: the Python
+    data-source workers cannot see the driver's ``sys.path`` entry, so
+    ``register()`` puts the package root on their path."""
+    _run_from_another_cwd("snapshot_served_dv_scan", sf_smoke, tmp_path)
+
+
+def test_udf_face_runs_from_another_cwd(sf_smoke, tmp_path):
+    """The same for a Python UDF face (``applyInPandas``): cloudpickle
+    ships the function by module path, and the registry sets up the
+    session's workers before the face builds its plan."""
+    _run_from_another_cwd("label_centroid_cohesion", sf_smoke, tmp_path)

@@ -785,3 +785,67 @@ def test_fs_path_exists_is_scheme_aware(spark, tmp_path):
     # explicit scheme-qualified URI resolves through the same API
     assert fs_path_exists(spark, f"file://{existing}") is True
     assert fs_path_exists(spark, f"file://{tmp_path}/missing") is False
+
+
+def _upsert_state(spark, target):
+    rows = spark.read.parquet(target).collect()
+    state = {r["k"]: (r["at"], r["v"]) for r in rows}
+    assert len(state) == len(rows), "duplicate keys in the upsert target"
+    return state
+
+
+_UPSERT_SCHEMA = "k long, at long, v string"
+_LANDED = {k: (1, f"old{k}") for k in range(6)}
+# keys 3..5 re-land newer, 6..8 are new, key 0 re-lands OLDER (must lose)
+_BATCH = [(k, 2, f"new{k}") for k in range(3, 9)] + [(0, 0, "stale0")]
+_AFTER = {**_LANDED, **{k: (2, f"new{k}") for k in range(3, 9)}}
+
+
+def test_upsert_sink_replay_after_failed_delete(spark, tmp_path, monkeypatch):
+    """The sink appends the merge before it deletes the files it merged:
+    when the delete fails, no landed row is lost, and replaying the batch
+    leaves one row per key, every key present, each at its latest
+    ``at``."""
+    from f1_bigdata_pyspark_spark.streaming import upsert_sink
+
+    target = str(tmp_path / "target")
+    sink = upsert_sink.foreach_batch_upsert(target, ["k"], "at")
+    sink(spark.createDataFrame([(k, *v) for k, v in _LANDED.items()], _UPSERT_SCHEMA), 0)
+    assert _upsert_state(spark, target) == _LANDED
+
+    real_delete = upsert_sink._delete_files
+    calls = []
+
+    def delete_fails_once(spark, paths):
+        calls.append(list(paths))
+        if len(calls) == 1:
+            raise OSError("injected delete failure")
+        real_delete(spark, paths)
+
+    monkeypatch.setattr(upsert_sink, "_delete_files", delete_fails_once)
+    batch = spark.createDataFrame(_BATCH, _UPSERT_SCHEMA)
+    with pytest.raises(OSError, match="injected"):
+        sink(batch, 1)
+    # old and merged files side by side: every landed key still there
+    kept = spark.read.parquet(target).collect()
+    assert {r["k"] for r in kept} == set(_AFTER)
+
+    sink(batch, 1)  # the replayed epoch
+    assert _upsert_state(spark, target) == _AFTER
+    assert len(calls) == 2 and calls[0] and set(calls[0]) < set(calls[1])
+
+
+def test_upsert_sink_failed_write_keeps_the_table(spark, tmp_path):
+    """A merge whose write job fails at runtime leaves the landed table as
+    it was: nothing is deleted before the new files exist."""
+    from f1_bigdata_pyspark_spark.streaming.upsert_sink import foreach_batch_upsert
+
+    target = str(tmp_path / "target")
+    sink = foreach_batch_upsert(target, ["k"], "at")
+    sink(spark.createDataFrame([(k, *v) for k, v in _LANDED.items()], _UPSERT_SCHEMA), 0)
+    bad = spark.createDataFrame(_BATCH, _UPSERT_SCHEMA).withColumn(
+        "v", F.when(F.col("k") == 8, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        sink(bad, 1)
+    assert _upsert_state(spark, target) == _LANDED
