@@ -521,7 +521,7 @@ class SnapshotReader(DataSourceReader):
         )
         from f1_bigdata_pyspark_spark.sources.snapshots import (
             FILE_META_KEY,
-            _bucket_of,
+            _file_masks,
             _stat_to_py,
         )
 
@@ -529,26 +529,18 @@ class SnapshotReader(DataSourceReader):
         gpp_opt = self.options.get("groups_per_partition")
         parts = self.manifest.get("partitions", {})
         stats = self.manifest.get("stats", {})
-        # MERGE-ON-READ: seq-scope the live tombstones per file exactly
-        # like _scan_with_tombstones — a tombstone applies to a file only
-        # if the delete POSTDATES the file (t.seq > file seq; files
-        # rewritten through the delete carry a later seq and ship none)
-        ts = self.manifest.get("tombstones") or []
+        # MERGE-ON-READ: each file ships the seq-scoped tombstones and
+        # the deletion-vector bucket slices that apply to it — the same
+        # masks _scan_with_tombstones applies
         t_keys = self.manifest.get("tombstone_keys") or []
-        seqs = self.manifest.get("file_seq", {})
-        # positional deletion vectors: per-file bucket-subdir routing
-        dv_records = [
-            (set(d["files"]), d["dir"], int(d["n_buckets"]))
-            for d in (self.manifest.get("dvs") or [])
-        ]
+        masks = _file_masks(self.manifest, files)
         out = []
         for f in files:
             pv = {
                 col: (None if tv is None else _stat_to_py(tv))
                 for col, tv in parts.get(f, {}).items()
             }
-            s = seqs.get(f, -1)  # unknown seq: oldest — deletes apply
-            tombs = [t["path"] for t in ts if t["seq"] > s]
+            tombs, dv_dirs = masks[f]
             # ROW-GROUP-RANGE SPLITTING (round 8): the manifest's file
             # meta (recorded at commit, no driver footer read here) says
             # how many row groups the file has; large files plan SEVERAL
@@ -563,11 +555,6 @@ class SnapshotReader(DataSourceReader):
                 if c != FILE_META_KEY
                 and isinstance(e, dict)
                 and e.get("nanc") == 0
-            ]
-            dv_dirs = [
-                os.path.join(dir_, f"__b={_bucket_of(f, nb)}")
-                for fset, dir_, nb in dv_records
-                if f in fset
             ]
             ng = int(meta.get("ng") or 1)
             if split and ng > 1:
@@ -694,7 +681,7 @@ def _plan_added_partitions(
     version, so no tombstone postdates it, and a vector names only
     pre-existing paths) — zero cost on the hot path."""
     from f1_bigdata_pyspark_spark.sources.snapshots import (
-        _bucket_of,
+        _file_masks,
         _stat_to_py,
     )
 
@@ -811,23 +798,16 @@ def _plan_added_partitions(
                 "re-sync from a snapshot read"
             )
         parts = m.get("partitions", {})
-        ts = m.get("tombstones") or []
         t_keys = m.get("tombstone_keys") or []
-        seqs = m.get("file_seq", {})
-        dv_records = [
-            (set(d["files"]), d["dir"], int(d["n_buckets"]))
-            for d in (m.get("dvs") or [])
-        ]
-        for f in m["files"]:
-            if f in seen:
-                continue
-            seen.add(f)
+        fresh = [f for f in m["files"] if f not in seen]
+        seen.update(fresh)
+        masks = _file_masks(m, fresh)
+        for f in fresh:
             pv = {
                 col: (None if tv is None else _stat_to_py(tv))
                 for col, tv in parts.get(f, {}).items()
             }
-            s = seqs.get(f, -1)  # unknown seq: oldest — deletes apply
-            tombs = [t["path"] for t in ts if t["seq"] > s]
+            tombs, dv_dirs = masks[f]
             part = SnapshotFilePartition(
                 f,
                 pv,
@@ -835,11 +815,7 @@ def _plan_added_partitions(
                 tombstone_keys=t_keys,
                 mapping=m.get("column_mapping"),
             )
-            part.dv_dirs = [
-                os.path.join(dir_, f"__b={_bucket_of(f, nb)}")
-                for fset, dir_, nb in dv_records
-                if f in fset
-            ]
+            part.dv_dirs = dv_dirs
             out.append(part)
         prev_m = m
     return out
@@ -902,6 +878,7 @@ def _plan_cdf_partitions(
     from f1_bigdata_pyspark_spark.sources.snapshots import (
         _ROW_PRESERVING_MODES,
         _bucket_of,
+        _file_masks,
         _stat_to_py,
         prune_files,
     )
@@ -963,27 +940,17 @@ def _plan_cdf_partitions(
         # initial snapshot: live rows of the baseline, as inserts —
         # THROUGH the baseline's own masks (same fix as the plain
         # stream's baseline, round 10)
-        ts = pm.get("tombstones") or []
-        seqs = pm.get("file_seq", {})
-        dv_records = [
-            (set(d["files"]), d["dir"], int(d["n_buckets"]))
-            for d in (pm.get("dvs") or [])
-        ]
+        masks = _file_masks(pm, pm["files"])
         for f in pm["files"]:
-            s = seqs.get(f, -1)
             _add(
                 _mk_part(
                     pm,
                     f,
                     "insert",
                     baseline,
-                    tombstones=[t["path"] for t in ts if t["seq"] > s],
+                    tombstones=masks[f][0],
                     tombstone_keys=pm.get("tombstone_keys") or [],
-                    dv_dirs=[
-                        os.path.join(dir_, f"__b={_bucket_of(f, nb)}")
-                        for fset, dir_, nb in dv_records
-                        if f in fset
-                    ],
+                    dv_dirs=masks[f][1],
                 )
             )
     for v in sorted(x for x in available if first <= x <= hi):
@@ -1085,14 +1052,8 @@ def _plan_cdf_partitions(
                 for t in (m.get("tombstones") or [])
                 if t["path"] not in prev_paths
             ]
-            ts = pm.get("tombstones") or []
-            seqs = pm.get("file_seq", {})
-            dv_records = [
-                (set(d["files"]), d["dir"], int(d["n_buckets"]))
-                for d in (pm.get("dvs") or [])
-            ]
+            masks = _file_masks(pm, m["files"])
             for f in m["files"]:
-                s = seqs.get(f, -1)
                 _add(
                     _mk_part(
                         m,
@@ -1101,15 +1062,9 @@ def _plan_cdf_partitions(
                         v,
                         # liveness at PREV (earlier deletes must not
                         # re-emit) composed with the new-key selection
-                        tombstones=[
-                            t["path"] for t in ts if t["seq"] > s
-                        ],
+                        tombstones=masks[f][0],
                         tombstone_keys=m.get("tombstone_keys") or [],
-                        dv_dirs=[
-                            os.path.join(dir_, f"__b={_bucket_of(f, nb)}")
-                            for fset, dir_, nb in dv_records
-                            if f in fset
-                        ],
+                        dv_dirs=masks[f][1],
                         tombstone_select=new_paths,
                     )
                 )

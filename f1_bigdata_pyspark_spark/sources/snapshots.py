@@ -542,6 +542,29 @@ def _bucket_of(lit, n: int) -> int | None:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % n
 
 
+def _write_dv(addresses: DataFrame, dv_buckets: int, data_dir: str) -> str:
+    """Write a positional deletion vector under a fresh ``dv-*`` dir of
+    ``data_dir`` and return that dir. ``addresses`` holds the dead rows'
+    (``__file``, ``__pos``); they land under ``__b=<bucket>`` subdirs
+    keyed by the md5 bucket of the file path — the bucket ``_bucket_of``
+    replays on the read side, so a task serving one file opens only that
+    file's slice of the vector."""
+    from pyspark.sql import functions as F
+
+    dv_dir = os.path.join(data_dir, f"dv-{uuid.uuid4().hex[:12]}")
+    (
+        addresses.withColumn(
+            "__b",
+            F.conv(F.substring(F.md5(F_col("__file")), 1, 15), 16, 10)
+            .cast("long")
+            % dv_buckets,
+        )
+        .write.partitionBy("__b")
+        .parquet(dv_dir)
+    )
+    return dv_dir
+
+
 _SCHEMA_COLS_CACHE: dict[str, frozenset] = {}
 
 
@@ -1105,6 +1128,122 @@ def _carry_dvs(manifest: dict, carried: set) -> list:
     return out
 
 
+def _file_masks(manifest: dict, files: list[str]) -> dict:
+    """Which masks apply to each of ``files`` in ``manifest``:
+    {file: (key-tombstone paths, deletion-vector bucket dirs)}. A
+    tombstone applies to the files committed before it (its ``seq``
+    postdates the file's; a file without a seq counts as oldest, so
+    deletes apply); a vector applies to the files its record names,
+    through the ``__b=<bucket>`` slice ``_write_dv`` put them in. Both
+    lists keep the manifest's record order, which is commit order in
+    every manifest, so a file whose masks compare equal in two manifests
+    serves the same live rows from both."""
+    seqs = manifest.get("file_seq", {})
+    ts = manifest.get("tombstones") or []
+    dvs = [
+        (set(d["files"]), d["dir"], int(d["n_buckets"]))
+        for d in manifest.get("dvs") or []
+    ]
+    out = {}
+    for f in files:
+        s = seqs.get(f, -1)
+        out[f] = (
+            [t["path"] for t in ts if t["seq"] > s],
+            [
+                os.path.join(dir_, f"__b={_bucket_of(f, nb)}")
+                for fset, dir_, nb in dvs
+                if f in fset
+            ],
+        )
+    return out
+
+
+# The manifest keys a new version takes from its base fall in three
+# classes. VERSION-LOCAL keys (version, mode, op, txn, change_data,
+# committed_at) describe one commit and never carry: a carried ``txn``
+# would make ``last_committed_batch`` report a batch this version never
+# wrote (an exactly-once writer then silently skips epochs), carried
+# change images would describe another commit's rows, and ``op`` marks
+# the one metadata-only version that set it. ``_publish`` alone stamps
+# committed_at. TABLE PROPERTIES carry on every successor, overwrite
+# included — an overwrite replaces data, not the contract. FILE-SCOPED
+# state carries with the files it describes: the per-file maps and
+# deletion vectors are restricted to the carried files, the keys below
+# (masks, renamed/retired physical names, layout) carry whole because
+# carried files still need them, and an overwrite — which carries no
+# file — resets all of it.
+_TABLE_PROPS = ("txns", "constraints", "schema")
+_FILE_SCOPED = (
+    "tombstones",
+    "tombstone_keys",
+    "column_mapping",
+    "retired_columns",
+    "evolved",
+    "bloom",
+    "partition_by",
+)
+
+
+def _successor(
+    manifest: dict,
+    mode: str,
+    *,
+    carried: list[str] | None = None,
+    new: tuple = ((), {}, {}),
+    **changes,
+) -> dict:
+    """The next version's manifest after ``manifest`` (``{}`` before a
+    table's first commit), built under the key classes above.
+    ``carried``: the base files the new version keeps, in base order
+    (default all; mode ``overwrite`` keeps none). ``new``: the (files,
+    stats, partitions) this commit wrote — stamped with the new
+    version's sequence. ``changes``: the keys this commit states itself;
+    a falsy value removes the key, and ``version`` overrides the number
+    (a rollback or a clone is not its base's number + 1)."""
+    new_files, new_stats, new_partitions = new
+    version = changes.pop("version", manifest.get("version", -1) + 1)
+    out = {k: manifest[k] for k in _TABLE_PROPS if manifest.get(k)}
+    if mode == "overwrite":
+        carried = []
+    else:
+        out.update({k: manifest[k] for k in _FILE_SCOPED if manifest.get(k)})
+    if carried is None:
+        files = list(manifest.get("files", []))
+        maps = {k: dict(manifest.get(k, {})) for k in _PER_FILE_MAPS}
+        dvs = manifest.get("dvs")
+    else:
+        keep = set(carried)
+        files = list(carried)
+        maps = {
+            k: {f: e for f, e in manifest.get(k, {}).items() if f in keep}
+            for k in _PER_FILE_MAPS
+        }
+        dvs = _carry_dvs(manifest, keep)
+    maps["stats"].update(new_stats)
+    maps["partitions"].update(new_partitions)
+    maps["file_seq"].update(dict.fromkeys(new_files, version))
+    out.update(
+        version=version,
+        mode=mode,
+        files=files + list(new_files),
+        stats=maps["stats"],
+        file_seq=maps["file_seq"],
+    )
+    if maps["partitions"]:
+        # carried point stats survive even when the current layout
+        # dropped the column (partition evolution): old files keep
+        # pruning through what their directories recorded
+        out["partitions"] = maps["partitions"]
+    if dvs:
+        out["dvs"] = dvs
+    for k, v in changes.items():
+        if v:
+            out[k] = v
+        else:
+            out.pop(k, None)
+    return out
+
+
 def _predicate_column(where: list[tuple[str, str, object]]):
     """The row-level Column for the same conjunction (skipping is coarse;
     this is the exact filter applied after the pruned scan)."""
@@ -1439,6 +1578,22 @@ class SnapshotTable:
                 f"version {version} already committed"
             ) from None
 
+    def _head(
+        self, expected_base_version: int | None = None
+    ) -> tuple[int, dict]:
+        """(version, manifest) of the head a write path builds on.
+        FileNotFoundError on a table with no commits; SnapshotConflictError
+        when ``expected_base_version`` is given and the head is another."""
+        base = self.latest_version()
+        if base is None:
+            raise FileNotFoundError(f"no commits at {self.root}")
+        if expected_base_version is not None and base != expected_base_version:
+            raise SnapshotConflictError(
+                f"table advanced to v{base}, expected "
+                f"v{expected_base_version}"
+            )
+        return base, self._read_manifest(base)
+
     # -- write path ---------------------------------------------------------
 
     def last_committed_batch(self, app_id: str) -> int | None:
@@ -1716,61 +1871,23 @@ class SnapshotTable:
                         "insert": df.exceptAll(pre),
                     }
                 cd_entry = self._write_change_data(frames)
-            new_files, new_stats, new_partitions = written
-            prior = prior_manifest.get("files", [])
-            stats = dict(prior_manifest.get("stats", {}))
-            partitions = dict(prior_manifest.get("partitions", {}))
-            stats.update(new_stats)
-            partitions.update(new_partitions)
-            version = 0 if base is None else base + 1
-            file_seq = dict(prior_manifest.get("file_seq", {}))
-            for f in new_files:
-                file_seq[f] = version
-            manifest = {
-                "version": version,
-                "mode": mode,
-                "files": prior + new_files,
-                "stats": stats,
-                "schema": table_schema_json,
-                "file_seq": file_seq,
-                "committed_at": __import__("time").time(),
-            }
-            if evolved:
-                manifest["evolved"] = True
-            if cd_entry is not None:
-                manifest["change_data"] = cd_entry
-            if bloom_spec:
-                manifest["bloom"] = bloom_spec
-            if constraints:
-                manifest["constraints"] = constraints
-            if mode == "append":
-                # renamed/retired column bookkeeping rides until an
-                # overwrite rewrites every file under the logical schema
-                for k_ in ("column_mapping", "retired_columns"):
-                    if prior_manifest.get(k_):
-                        manifest[k_] = prior_manifest[k_]
-            # appends keep live tombstones (they still apply to prior
-            # files); overwrite starts clean — the set they scoped is gone
-            if mode == "append" and prior_manifest.get("tombstones"):
-                manifest["tombstones"] = prior_manifest["tombstones"]
-                manifest["tombstone_keys"] = prior_manifest["tombstone_keys"]
-            if mode == "append" and prior_manifest.get("dvs"):
-                # positional vectors keep applying to the carried files
-                manifest["dvs"] = prior_manifest["dvs"]
-            if partition_by:
-                manifest["partition_by"] = list(partition_by)
-            if partitions:
-                # carried point stats survive even when the CURRENT layout
-                # dropped the column (partition evolution): old files keep
-                # pruning through what their directories recorded
-                manifest["partitions"] = partitions
             txns = dict(head_manifest.get("txns", {}))
             if txn is not None:
-                manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
                 prev = txns.get(txn[0])
                 txns[txn[0]] = max(int(txn[1]), int(prev)) if prev is not None else int(txn[1])
-            if txns:
-                manifest["txns"] = txns
+            manifest = _successor(
+                head_manifest,
+                mode,
+                new=written,
+                schema=table_schema_json,
+                evolved=evolved,
+                bloom=bloom_spec,
+                partition_by=list(partition_by or []),
+                txns=txns,
+                txn={"app": txn[0], "batch": int(txn[1])} if txn else None,
+                change_data=cd_entry,
+            )
+            version = manifest["version"]
             if _before_publish is not None:  # test seam: deterministic race
                 hook, _before_publish = _before_publish, None
                 hook()
@@ -1819,8 +1936,13 @@ class SnapshotTable:
             partition_by = [_canon_partition_spec(s) for s in partition_by]
         for _attempt in range(20):
             base = self.latest_version()
+            # the head is read in overwrite mode too: its file set is
+            # discarded (overwrite starts clean) but the table properties
+            # carry — dropping ``txns`` would erase every streaming
+            # writer's exactly-once evidence, letting a replayed
+            # foreachBatch epoch commit a second time
+            head = self._read_manifest(base) if base is not None else {}
             if mode == "append" and base is not None:
-                head = self._read_manifest(base)
                 if list(partition_by or []) != (
                     head.get("partition_by") or []
                 ):
@@ -1850,58 +1972,19 @@ class SnapshotTable:
                         "schema_json required for the first/overwrite commit"
                     )
                 use_schema = schema_json
-            # the head is read in overwrite mode too: its file list/stats
-            # are discarded (overwrite starts clean) but the txns map must
-            # carry forward like commit() does — dropping it would erase
-            # every streaming writer's exactly-once evidence, letting a
-            # replayed foreachBatch epoch commit a second time
-            head_manifest = (
-                self._read_manifest(base) if base is not None else {}
-            )
-            prior_manifest = head_manifest if mode == "append" else {}
-            version = 0 if base is None else base + 1
-            all_stats = dict(prior_manifest.get("stats", {}))
-            all_stats.update(stats)
-            file_seq = dict(prior_manifest.get("file_seq", {}))
-            for f in files:
-                file_seq[f] = version
-            manifest = {
-                "version": version,
-                "mode": mode,
-                "files": prior_manifest.get("files", []) + list(files),
-                "stats": all_stats,
-                "schema": use_schema,
-                "file_seq": file_seq,
-            }
-            if prior_manifest.get("evolved"):
-                manifest["evolved"] = True
-            if prior_manifest.get("bloom"):
-                manifest["bloom"] = prior_manifest["bloom"]
-            if head_manifest.get("txns"):
-                manifest["txns"] = head_manifest["txns"]
             # constraints carry as a table property; externally-written
             # files are NOT re-read here (no session) — the writer that
             # produced them owns validation (the DataSource writer's
             # frame came through Spark, so its rows were the caller's to
             # check; a raw add_files caller is trusted like Iceberg's)
-            if head_manifest.get("constraints"):
-                manifest["constraints"] = head_manifest["constraints"]
-            if mode == "append":
-                for k_ in ("column_mapping", "retired_columns"):
-                    if prior_manifest.get(k_):
-                        manifest[k_] = prior_manifest[k_]
-            if mode == "append" and prior_manifest.get("tombstones"):
-                manifest["tombstones"] = prior_manifest["tombstones"]
-                manifest["tombstone_keys"] = prior_manifest["tombstone_keys"]
-            if mode == "append" and prior_manifest.get("dvs"):
-                # positional vectors keep applying to the carried files
-                manifest["dvs"] = prior_manifest["dvs"]
-            all_partitions = dict(prior_manifest.get("partitions", {}))
-            all_partitions.update(partitions or {})
-            if all_partitions:
-                manifest["partitions"] = all_partitions
-            if partition_by:
-                manifest["partition_by"] = list(partition_by)
+            manifest = _successor(
+                head,
+                mode,
+                new=(files, stats, partitions or {}),
+                schema=use_schema,
+                partition_by=list(partition_by or []),
+            )
+            version = manifest["version"]
             if _before_publish is not None:
                 hook, _before_publish = _before_publish, None
                 hook()
@@ -2178,15 +2261,7 @@ class SnapshotTable:
 
         from f1_bigdata_pyspark_spark.operators.merge import merge_into
 
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        if expected_base_version is not None and base != expected_base_version:
-            raise SnapshotConflictError(
-                f"table advanced to v{base}, expected "
-                f"v{expected_base_version}"
-            )
-        manifest = self._read_manifest(base)
+        _, manifest = self._head(expected_base_version)
 
         # stats pre-prune: only files overlapping the changeset's key range
         # can be touched (single-row source agg — bounded metadata)
@@ -2267,62 +2342,18 @@ class SnapshotTable:
         cur = manifest  # the manifest this rewrite is valid against
         for _attempt in range(20):
             carried = [f for f in cur["files"] if f not in touched]
-            carried_set = set(carried)
-            stats = {
-                f: s
-                for f, s in cur.get("stats", {}).items()
-                if f in carried_set
-            }
-            stats.update(new_stats)
-            partitions = {
-                f: p
-                for f, p in cur.get("partitions", {}).items()
-                if f in carried_set
-            }
-            partitions.update(new_partitions)
-            version = cur["version"] + 1
-            file_seq = {
-                f: s_
-                for f, s_ in cur.get("file_seq", {}).items()
-                if f in carried_set
-            }
-            for f in new_files:
-                file_seq[f] = version
-            out = {
-                "version": version,
-                "mode": "merge",
-                "files": carried + new_files,
-                "stats": stats,
-                "schema": cur["schema"],
-                "file_seq": file_seq,
-                "committed_at": __import__("time").time(),
-            }
-            if cur.get("evolved"):
-                out["evolved"] = True  # carried files may be old-schema
-            if cur.get("bloom"):
-                out["bloom"] = cur["bloom"]
-            if cur.get("txns"):
-                out["txns"] = cur["txns"]  # writer evidence survives DML
-            if cur.get("constraints"):
-                out["constraints"] = cur["constraints"]
-            for k_ in ("column_mapping", "retired_columns"):
-                if cur.get(k_):
-                    out[k_] = cur[k_]
-            if cur.get("tombstones"):
-                # rewritten files were built THROUGH the tombstones and get
-                # a post-delete seq, so carried tombstones keep applying
-                # only to the untouched old files — no resurrection, no
-                # double-delete
-                out["tombstones"] = cur["tombstones"]
-                out["tombstone_keys"] = cur["tombstone_keys"]
-            dvs_c = _carry_dvs(cur, carried_set)
-            if dvs_c:  # positional vectors: same through-the-scan contract
-                out["dvs"] = dvs_c
-            if cur.get("partition_by"):
-                out["partition_by"] = cur["partition_by"]
-            if partitions:
-                out["partitions"] = partitions
-            out["change_data"] = cd_entry
+            # rewritten files were built THROUGH the tombstones and
+            # vectors and get a post-delete seq, so the carried masks keep
+            # applying only to the untouched old files — no resurrection,
+            # no double-delete
+            out = _successor(
+                cur,
+                "merge",
+                carried=carried,
+                new=(new_files, new_stats, new_partitions),
+                change_data=cd_entry,
+            )
+            version = out["version"]
             if _before_publish is not None:  # test seam: deterministic race
                 hook, _before_publish = _before_publish, None
                 hook()
@@ -2395,15 +2426,7 @@ class SnapshotTable:
         OUTSIDE the predicate (they would silently leak into the table —
         the same guard Delta applies). Returns {"version",
         "files_replaced", "files_carried", "files_written"}."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        if expected_base_version is not None and base != expected_base_version:
-            raise SnapshotConflictError(
-                f"table advanced to v{base}, expected "
-                f"v{expected_base_version}"
-            )
-        manifest = self._read_manifest(base)
+        base, manifest = self._head(expected_base_version)
         # same schema-on-write contract as append: silent column
         # remapping inside a replaced region is how tables rot
         want = [
@@ -2444,7 +2467,6 @@ class SnapshotTable:
         # point stats: may-match == all-match, so this removal is exact
         removed = set(prune_files(manifest, where))
         carried = [f for f in manifest["files"] if f not in removed]
-        carried_set = set(carried)
         if manifest.get("constraints"):
             _validate_constraints(
                 df, manifest["constraints"], "the replacement rows"
@@ -2452,69 +2474,30 @@ class SnapshotTable:
         new_files, new_stats, new_partitions = self._write_data_files(
             df, manifest.get("partition_by"), **self._bloom_kwargs(manifest)
         )
-        stats = {
-            f: s
-            for f, s in manifest.get("stats", {}).items()
-            if f in carried_set
-        }
-        stats.update(new_stats)
-        partitions = {
-            f: p for f, p in part_values.items() if f in carried_set
-        }
-        partitions.update(new_partitions)
-        version = base + 1
-        file_seq = {
-            f: s_
-            for f, s_ in manifest.get("file_seq", {}).items()
-            if f in carried_set
-        }
-        for f in new_files:
-            file_seq[f] = version
-        out = {
-            "version": version,
-            "mode": "replace-where",
-            "files": carried + new_files,
-            "stats": stats,
-            "schema": manifest["schema"],
-            "file_seq": file_seq,
-            "committed_at": __import__("time").time(),
-        }
-        if manifest.get("evolved"):
-            out["evolved"] = True
-        if manifest.get("bloom"):
-            out["bloom"] = manifest["bloom"]
-        if manifest.get("txns"):
-            out["txns"] = manifest["txns"]
-        if manifest.get("constraints"):
-            out["constraints"] = manifest["constraints"]
-        for k_ in ("column_mapping", "retired_columns"):
-            if manifest.get(k_):
-                out[k_] = manifest[k_]
-        if manifest.get("tombstones"):
-            # carried old files still need them; the replacement files get
-            # a post-delete seq (their content is NEW rows by definition)
-            out["tombstones"] = manifest["tombstones"]
-            out["tombstone_keys"] = manifest["tombstone_keys"]
-        dvs_c = _carry_dvs(manifest, carried_set)
-        if dvs_c:
-            out["dvs"] = dvs_c
-        if manifest.get("partition_by"):
-            out["partition_by"] = manifest["partition_by"]
-        if partitions:
-            out["partitions"] = partitions
         # change data (round 11): old live rows of the replaced region vs
         # the replacement frame — exceptAll cancels re-written identical
         # rows, matching the feed's generic diff semantics exactly
         region = self._scan_with_tombstones(spark, manifest, sorted(removed))
-        out["change_data"] = self._write_change_data(
+        cd_entry = self._write_change_data(
             {
                 "delete": region.exceptAll(df),
                 "insert": df.exceptAll(region),
             }
         )
-        self._publish(version, out)
+        # carried old files keep their masks; the replacement files get a
+        # post-delete seq (their content is NEW rows by definition)
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "replace-where",
+                carried=carried,
+                new=(new_files, new_stats, new_partitions),
+                change_data=cd_entry,
+            ),
+        )
         return {
-            "version": version,
+            "version": base + 1,
             "files_replaced": len(removed),
             "files_carried": len(carried),
             "files_written": len(new_files),
@@ -2620,10 +2603,7 @@ class SnapshotTable:
         Returns {"version", "files_rewritten", "files_carried",
         "rows_purged"}; no file over the threshold = no-op, nothing
         published."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         dvs = manifest.get("dvs") or []
         noop = {
             "version": base,
@@ -2663,61 +2643,19 @@ class SnapshotTable:
         new_files, new_stats, new_partitions = self._write_data_files(
             df, manifest.get("partition_by"), **self._bloom_kwargs(manifest)
         )
-        carried = [f for f in manifest["files"] if f not in set(rewrite)]
-        carried_set = set(carried)
-        out_stats = {
-            f: s
-            for f, s in manifest.get("stats", {}).items()
-            if f in carried_set
-        }
-        out_stats.update(new_stats)
-        partitions = {
-            f: p
-            for f, p in manifest.get("partitions", {}).items()
-            if f in carried_set
-        }
-        partitions.update(new_partitions)
-        version = base + 1
-        file_seq = {
-            f: s_
-            for f, s_ in manifest.get("file_seq", {}).items()
-            if f in carried_set
-        }
-        for f in new_files:
-            file_seq[f] = version
-        out = {
-            "version": version,
-            "mode": "optimize-deletions",
-            "files": carried + new_files,
-            "stats": out_stats,
-            "schema": manifest["schema"],
-            "file_seq": file_seq,
-            "committed_at": __import__("time").time(),
-        }
-        for k in (
-            "evolved",
-            "bloom",
-            "txns",
-            "constraints",
-            "partition_by",
-            "column_mapping",
-            "retired_columns",
-        ):
-            if manifest.get(k):
-                out[k] = manifest[k]
-        if manifest.get("tombstones"):
-            # rewritten files went THROUGH the tombstones; carried files
-            # still need them (post-rewrite seq exempts the new ones)
-            out["tombstones"] = manifest["tombstones"]
-            out["tombstone_keys"] = manifest["tombstone_keys"]
-        dvs_c = _carry_dvs(manifest, carried_set)
-        if dvs_c:
-            out["dvs"] = dvs_c
-        if partitions:
-            out["partitions"] = partitions
-        self._publish(version, out)
+        rewritten = set(rewrite)
+        carried = [f for f in manifest["files"] if f not in rewritten]
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "optimize-deletions",
+                carried=carried,
+                new=(new_files, new_stats, new_partitions),
+            ),
+        )
         return {
-            "version": version,
+            "version": base + 1,
             "files_rewritten": len(rewrite),
             "files_carried": len(carried),
             "rows_purged": purged,
@@ -2744,10 +2682,7 @@ class SnapshotTable:
         feed emits nothing for it. Old vector dirs stay referenced by
         old manifests until vacuum. Returns {"version",
         "dv_records_before", "dv_records_after", "rows_carried"}."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         dvs = manifest.get("dvs") or []
         if len(dvs) <= max_records:
             return {
@@ -2767,35 +2702,18 @@ class SnapshotTable:
         vec = union.join(
             F.broadcast(names_df), "__file", "left_semi"
         ).distinct()
-        dv_dir = os.path.join(self.data_dir, f"dv-{uuid.uuid4().hex[:12]}")
-        (
-            vec.withColumn(
-                "__b",
-                F.conv(F.substring(F.md5(F_col("__file")), 1, 15), 16, 10)
-                .cast("long")
-                % dv_buckets,
-            )
-            .write.partitionBy("__b")
-            .parquet(dv_dir)
-        )
+        dv_dir = _write_dv(vec, dv_buckets, self.data_dir)
         rows = spark.read.parquet(dv_dir).count()
-        version = base + 1
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        out.update(
-            {
-                "version": version,
-                "mode": "dv-consolidate",
-                "dvs": [
-                    {"dir": dv_dir, "files": named, "n_buckets": dv_buckets}
-                ],
-                "committed_at": __import__("time").time(),
-            }
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "dv-consolidate",
+                dvs=[{"dir": dv_dir, "files": named, "n_buckets": dv_buckets}],
+            ),
         )
-        self._publish(version, out)
         return {
-            "version": version,
+            "version": base + 1,
             "dv_records_before": len(dvs),
             "dv_records_after": 1,
             "rows_carried": rows,
@@ -2825,10 +2743,7 @@ class SnapshotTable:
         current version, nothing written) when fewer than 2 small files
         exist. Returns {"version", "files_compacted", "files_carried",
         "files_written"}."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         # file sizes from the manifest's commit-time meta when recorded
         # (zero filesystem round-trips at 1M files; also works on
         # scheme'd roots); stat() only for pre-meta files
@@ -2859,59 +2774,19 @@ class SnapshotTable:
         new_files, new_stats, new_partitions = self._write_data_files(
             df, manifest.get("partition_by"), **self._bloom_kwargs(manifest)
         )
-        stats = {
-            f: s for f, s in manifest.get("stats", {}).items() if f in set(large)
-        }
-        stats.update(new_stats)
-        partitions = {
-            f: p
-            for f, p in manifest.get("partitions", {}).items()
-            if f in set(large)
-        }
-        partitions.update(new_partitions)
-        version = base + 1
-        file_seq = {
-            f: s_
-            for f, s_ in manifest.get("file_seq", {}).items()
-            if f in set(large)
-        }
-        for f in new_files:
-            file_seq[f] = version
-        out = {
-            "version": version,
-            "mode": "optimize-incremental",
-            "files": large + new_files,
-            "stats": stats,
-            "schema": manifest["schema"],
-            "file_seq": file_seq,
-            "committed_at": __import__("time").time(),
-        }
-        if manifest.get("evolved"):
-            out["evolved"] = True
-        if manifest.get("bloom"):
-            out["bloom"] = manifest["bloom"]
-        if manifest.get("txns"):
-            out["txns"] = manifest["txns"]
-        if manifest.get("constraints"):
-            out["constraints"] = manifest["constraints"]
-        for k_ in ("column_mapping", "retired_columns"):
-            if manifest.get(k_):
-                out[k_] = manifest[k_]
-        if manifest.get("tombstones"):
-            # compacted files were rewritten through the tombstones; the
-            # carried large files still need them
-            out["tombstones"] = manifest["tombstones"]
-            out["tombstone_keys"] = manifest["tombstone_keys"]
-        dvs_c = _carry_dvs(manifest, set(large))
-        if dvs_c:
-            out["dvs"] = dvs_c
-        if manifest.get("partition_by"):
-            out["partition_by"] = manifest["partition_by"]
-        if partitions:  # carried point stats survive partition evolution
-            out["partitions"] = partitions
-        self._publish(version, out)
+        # compacted files were rewritten through the masks; the carried
+        # large files still need them
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "optimize-incremental",
+                carried=large,
+                new=(new_files, new_stats, new_partitions),
+            ),
+        )
         return {
-            "version": version,
+            "version": base + 1,
             "files_compacted": len(small),
             "files_carried": len(large),
             "files_written": len(new_files),
@@ -2938,10 +2813,7 @@ class SnapshotTable:
         placement as the 2PC writer's executor-side stats collection).
         Returns {"version", "files_refreshed"}; nothing stale = no-op,
         nothing published."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         fields = json.loads(manifest["schema"])["fields"]
         float_cols = [
             f["name"] for f in fields if f["type"] in ("float", "double")
@@ -2987,21 +2859,14 @@ class SnapshotTable:
                 if b is not None:  # blooms only exist in the old harvest
                     merged[col] = {**merged.get(col, {}), "bloom": b}
             out_stats[f] = merged
-        version = base + 1
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        out.update(
-            {
-                "version": version,
-                "mode": "append",  # same file set: streams skip clean
-                "op": "refresh-stats",
-                "stats": out_stats,
-                "committed_at": __import__("time").time(),
-            }
+        # mode append: same file set, streams skip clean
+        self._publish(
+            base + 1,
+            _successor(
+                manifest, "append", op="refresh-stats", stats=out_stats
+            ),
         )
-        self._publish(version, out)
-        return {"version": version, "files_refreshed": len(todo)}
+        return {"version": base + 1, "files_refreshed": len(todo)}
 
     def rollback(
         self, to_version: int, spark: SparkSession | None = None
@@ -3019,29 +2884,7 @@ class SnapshotTable:
         target = self._read_manifest(to_version)
         base = self.latest_version()
         version = (base if base is not None else -1) + 1
-        manifest = {
-            "version": version,
-            "mode": f"rollback-to-v{to_version}",
-            "files": target["files"],
-            "stats": target.get("stats", {}),
-            "schema": target["schema"],
-        }
-        for k in (
-            "partition_by",
-            "partitions",
-            "evolved",
-            "file_seq",
-            "tombstones",
-            "tombstone_keys",
-            "dvs",
-            "bloom",
-            "txns",
-            "constraints",
-            "column_mapping",
-            "retired_columns",
-        ):
-            if k in target:
-                manifest[k] = target[k]
+        cd_entry = None
         if spark is not None and base is not None:
             # restrict the two-sided diff to files whose VISIBILITY
             # differs between head and target (same signature rule as
@@ -3049,7 +2892,8 @@ class SnapshotTable:
             # commit's files, not the table
             pm = self._read_manifest(base)
             pf, tf = set(pm["files"]), set(target["files"])
-            psig, csig = _mask_signatures(pm), _mask_signatures(target)
+            psig = _file_masks(pm, pm["files"])
+            csig = _file_masks(target, target["files"])
             aff_prev = [
                 f for f in pm["files"] if f not in tf or psig[f] != csig[f]
             ]
@@ -3066,8 +2910,18 @@ class SnapshotTable:
                 }
             else:
                 frames = {}
-            manifest["change_data"] = self._write_change_data(frames)
-        self._publish(version, manifest)
+            cd_entry = self._write_change_data(frames)
+        # the successor of the TARGET: its file set and every carried key
+        # come back; only the version number continues from the head
+        self._publish(
+            version,
+            _successor(
+                target,
+                f"rollback-to-v{to_version}",
+                version=version,
+                change_data=cd_entry,
+            ),
+        )
         return version
 
     # -- read path ----------------------------------------------------------
@@ -3087,17 +2941,7 @@ class SnapshotTable:
         references on the source's next vacuum."""
         if self.versions():
             raise ValueError(f"clone target {self.root} is not empty")
-        src_v = source.latest_version()
-        if src_v is None:
-            raise FileNotFoundError(f"no commits at {source.root}")
-        m = dict(source._read_manifest(src_v))
-        # the source's txn stamps certify the SOURCE writers' batches; a
-        # clone committed no such batches (see delete_keys for the hazard)
-        m.pop("txn", None)
-        m.pop("txns", None)
-        # the source's last commit's change images describe ITS history,
-        # not the clone's v0 baseline
-        m.pop("change_data", None)
+        src_v, m = source._head()
         # back-reference for the source's vacuum (see its docstring) —
         # written ATOMICALLY (tmp + replace) like every manifest: a torn
         # ref would wedge every future vacuum of the source at json.load
@@ -3105,14 +2949,15 @@ class SnapshotTable:
         source._fs.makedirs(clones_dir)
         ref = os.path.join(clones_dir, f"{uuid.uuid4().hex}.json")
         source._fs.replace_atomic(ref, json.dumps({"root": self.root}))
-        m.update(
-            {
-                "version": 0,
-                "mode": f"clone-of-{source.root}@v{src_v}",
-                "committed_at": __import__("time").time(),
-            }
+        # the source's ``txns`` certify the SOURCE writers' batches; a
+        # clone committed no such batches, and an exactly-once writer
+        # trusting them would silently skip its own epochs
+        self._publish(
+            0,
+            _successor(
+                m, f"clone-of-{source.root}@v{src_v}", version=0, txns=None
+            ),
         )
-        self._publish(0, m)
         return 0
 
     def delete_keys(
@@ -3132,10 +2977,7 @@ class SnapshotTable:
         old files); the change feed refuses to cross a delete (same
         re-sync contract as overwrite). Returns {"version",
         "n_tombstoned"}."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         prior_keys = manifest.get("tombstone_keys")
         if prior_keys is not None and prior_keys != keys:
             raise ValueError(
@@ -3148,27 +2990,19 @@ class SnapshotTable:
             spark.read.parquet(*new_files).count() if new_files else 0
         )
         version = base + 1
-        out = dict(manifest)
-        # the txn stamp certifies "THIS version committed streaming batch
-        # N"; deriving a delete manifest from the prior one must not carry
-        # it, or last_committed_batch reports a batch this version never
-        # wrote and an exactly-once writer silently skips epochs
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        out.update(
-            {
-                "version": version,
-                "mode": "delete",
+        self._publish(
+            version,
+            _successor(
+                manifest,
+                "delete",
                 # sequence-scoped (Iceberg v2 equality-delete contract):
                 # a tombstone applies only to data files COMMITTED BEFORE
                 # it, so a later re-insert of the same key is visible
-                "tombstones": manifest.get("tombstones", [])
+                tombstones=manifest.get("tombstones", [])
                 + [{"path": f, "seq": version} for f in new_files],
-                "tombstone_keys": keys,
-                "committed_at": __import__("time").time(),
-            }
+                tombstone_keys=keys,
+            ),
         )
-        self._publish(version, out)
         return {"version": version, "n_tombstoned": n}
 
     def delete_where(
@@ -3260,17 +3094,9 @@ class SnapshotTable:
         Returns {"version", "rows_deleted", "files_touched",
         "files_rewritten": 0}; a predicate matching no rows publishes
         NOTHING (same no-op contract as the CoW form)."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        if expected_base_version is not None and base != expected_base_version:
-            raise SnapshotConflictError(
-                f"table advanced to v{base}, expected "
-                f"v{expected_base_version}"
-            )
         from pyspark.sql import functions as F
 
-        manifest = self._read_manifest(base)
+        base, manifest = self._head(expected_base_version)
         touched = prune_files(manifest, where)
         noop = {
             "version": base,
@@ -3289,21 +3115,13 @@ class SnapshotTable:
             # (e.g. a prior vector already masked them): publishing —
             # or even writing an empty partitioned vector — is a no-op
             return noop
-        dv_dir = os.path.join(self.data_dir, f"dv-{uuid.uuid4().hex[:12]}")
-        (
-            scan.filter(pred)
-            .select(
+        dv_dir = _write_dv(
+            scan.filter(pred).select(
                 F_col("__dv_file").alias("__file"),
                 F_col("__dv_pos").alias("__pos"),
-            )
-            .withColumn(
-                "__b",
-                F.conv(F.substring(F.md5(F_col("__file")), 1, 15), 16, 10)
-                .cast("long")
-                % dv_buckets,
-            )
-            .write.partitionBy("__b")
-            .parquet(dv_dir)
+            ),
+            dv_buckets,
+            self.data_dir,
         )
         # accounting + routing from the written vector itself — the DV
         # is O(deleted rows), so one narrow read-back is O(changeset)
@@ -3331,26 +3149,14 @@ class SnapshotTable:
         # addresses) and (b) added no file that may hold matching rows
         # (our vector would miss them — an incomplete DELETE). Both
         # checks are O(manifest); violation aborts with the conflict.
+        record = {"dir": dv_dir, "files": touched_files, "n_buckets": dv_buckets}
         for _attempt in range(20):
-            version = manifest["version"] + 1
-            out = dict(manifest)
-            out.pop("txn", None)
-            out.pop("change_data", None)  # images are version-local
-            out.update(
-                {
-                    "version": version,
-                    "mode": "delete-dv",
-                    "dvs": (manifest.get("dvs") or [])
-                    + [
-                        {
-                            "dir": dv_dir,
-                            "files": touched_files,
-                            "n_buckets": dv_buckets,
-                        }
-                    ],
-                    "committed_at": __import__("time").time(),
-                }
+            out = _successor(
+                manifest,
+                "delete-dv",
+                dvs=(manifest.get("dvs") or []) + [record],
             )
+            version = out["version"]
             try:
                 self._publish(version, out)
             except SnapshotConflictError:
@@ -3416,17 +3222,9 @@ class SnapshotTable:
         predicate matching no rows publishes nothing."""
         if not set_exprs:
             raise ValueError("update_where_mor needs at least one SET column")
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        if expected_base_version is not None and base != expected_base_version:
-            raise SnapshotConflictError(
-                f"table advanced to v{base}, expected "
-                f"v{expected_base_version}"
-            )
         from pyspark.sql import functions as F
 
-        manifest = self._read_manifest(base)
+        base, manifest = self._head(expected_base_version)
         touched = prune_files(manifest, where)
         noop = {
             "version": base,
@@ -3463,20 +3261,13 @@ class SnapshotTable:
             _validate_constraints(
                 updated, manifest["constraints"], "the updated rows"
             )
-        dv_dir = os.path.join(self.data_dir, f"dv-{uuid.uuid4().hex[:12]}")
-        (
+        dv_dir = _write_dv(
             matching.select(
                 F_col("__dv_file").alias("__file"),
                 F_col("__dv_pos").alias("__pos"),
-            )
-            .withColumn(
-                "__b",
-                F.conv(F.substring(F.md5(F_col("__file")), 1, 15), 16, 10)
-                .cast("long")
-                % dv_buckets,
-            )
-            .write.partitionBy("__b")
-            .parquet(dv_dir)
+            ),
+            dv_buckets,
+            self.data_dir,
         )
         dv = spark.read.parquet(dv_dir)
         touched_files = sorted(
@@ -3498,40 +3289,18 @@ class SnapshotTable:
             manifest.get("partition_by"),
             **self._bloom_kwargs(manifest),
         )
-        version = base + 1
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        stats = dict(manifest.get("stats", {}))
-        stats.update(new_stats)
-        partitions = dict(manifest.get("partitions", {}))
-        partitions.update(new_partitions)
-        file_seq = dict(manifest.get("file_seq", {}))
-        for f in new_files:
-            file_seq[f] = version
-        out.update(
-            {
-                "version": version,
-                "mode": "update-dv",
-                "files": manifest["files"] + new_files,
-                "stats": stats,
-                "file_seq": file_seq,
-                "dvs": (manifest.get("dvs") or [])
-                + [
-                    {
-                        "dir": dv_dir,
-                        "files": touched_files,
-                        "n_buckets": dv_buckets,
-                    }
-                ],
-                "committed_at": __import__("time").time(),
-            }
+        record = {"dir": dv_dir, "files": touched_files, "n_buckets": dv_buckets}
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "update-dv",
+                new=(new_files, new_stats, new_partitions),
+                dvs=(manifest.get("dvs") or []) + [record],
+            ),
         )
-        if partitions:
-            out["partitions"] = partitions
-        self._publish(version, out)
         return {
-            "version": version,
+            "version": base + 1,
             "rows_updated": rows_updated,
             "files_touched": len(touched_files),
             "files_rewritten": 0,
@@ -3547,17 +3316,10 @@ class SnapshotTable:
     ) -> dict:
         from pyspark.sql import functions as F
 
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        if expected_base_version is not None and base != expected_base_version:
-            raise SnapshotConflictError(
-                f"table advanced to v{base}, expected "
-                f"v{expected_base_version}"
-            )
-        manifest = self._read_manifest(base)
+        base, manifest = self._head(expected_base_version)
         touched = prune_files(manifest, where)
-        carried = [f for f in manifest["files"] if f not in set(touched)]
+        touched_set = set(touched)
+        carried = [f for f in manifest["files"] if f not in touched_set]
         if not touched:
             return {
                 "version": base,
@@ -3633,62 +3395,21 @@ class SnapshotTable:
             manifest.get("partition_by"),
             **self._bloom_kwargs(manifest),
         )
-        carried_set = set(carried)
-        stats = {
-            f: s
-            for f, s in manifest.get("stats", {}).items()
-            if f in carried_set
-        }
-        stats.update(new_stats)
-        partitions = {
-            f: p
-            for f, p in manifest.get("partitions", {}).items()
-            if f in carried_set
-        }
-        partitions.update(new_partitions)
-        version = base + 1
-        file_seq = {
-            f: s_
-            for f, s_ in manifest.get("file_seq", {}).items()
-            if f in carried_set
-        }
-        for f in new_files:
-            file_seq[f] = version
-        out = {
-            "version": version,
-            "mode": mode,
-            "files": carried + new_files,
-            "stats": stats,
-            "schema": manifest["schema"],
-            "file_seq": file_seq,
-            "committed_at": __import__("time").time(),
-        }
-        for k in (
-            "evolved",
-            "bloom",
-            "txns",
-            "constraints",
-            "partition_by",
-            "column_mapping",
-            "retired_columns",
-        ):
-            if manifest.get(k):
-                out[k] = manifest[k]
-        if manifest.get("tombstones"):
-            # carried files still need them; the rewritten files went
-            # THROUGH the tombstones (scan applied the anti-join), so
-            # their post-rewrite seq exempts them
-            out["tombstones"] = manifest["tombstones"]
-            out["tombstone_keys"] = manifest["tombstone_keys"]
-        dvs_c = _carry_dvs(manifest, carried_set)
-        if dvs_c:
-            out["dvs"] = dvs_c
-        if partitions:
-            out["partitions"] = partitions
-        out["change_data"] = cd_entry
-        self._publish(version, out)
+        # carried files keep their masks; the rewritten files went
+        # THROUGH them (the scan applied the anti-joins), so their
+        # post-rewrite seq exempts them
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                mode,
+                carried=carried,
+                new=(new_files, new_stats, new_partitions),
+                change_data=cd_entry,
+            ),
+        )
         return {
-            "version": version,
+            "version": base + 1,
             "files_rewritten": len(touched),
             "files_carried": len(carried),
             "rows_changed": rows_changed,
@@ -3740,12 +3461,10 @@ class SnapshotTable:
             return self._plan_scan(
                 spark, manifest, files, with_file_name=with_file_name
             )
-        seqs = manifest.get("file_seq", {})
+        masks = _file_masks(manifest, files)
         groups: dict[tuple, list[str]] = {}
         for f in files:
-            s = seqs.get(f, -1)  # unknown seq: oldest — deletes apply (sound)
-            applicable = tuple(t["path"] for t in ts if t["seq"] > s)
-            groups.setdefault(applicable, []).append(f)
+            groups.setdefault(tuple(masks[f][0]), []).append(f)
         parts = []
         for applicable, fs in sorted(groups.items()):
             df = self._plan_scan(
@@ -4156,10 +3875,7 @@ class SnapshotTable:
         ``replace_where``; ``optimize`` routes through commit.
         ``publish_files`` carries but cannot validate (no session —
         externally-written files are the caller's to check)."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         constraints = dict(manifest.get("constraints", {}))
         if name in constraints:
             raise ValueError(
@@ -4170,48 +3886,23 @@ class SnapshotTable:
             self.read(spark), {name: expr}, "the existing table"
         )
         constraints[name] = expr
-        out = dict(manifest)
-        out.pop("txn", None)  # metadata version committed no batch
-        out.pop("change_data", None)  # images are version-local
-        version = base + 1
-        out.update(
-            {
-                "version": version,
-                "mode": "append",  # same file set: streams skip it clean
-                "constraints": constraints,
-                "committed_at": __import__("time").time(),
-            }
+        # mode append: same file set, streams skip it clean
+        self._publish(
+            base + 1, _successor(manifest, "append", constraints=constraints)
         )
-        self._publish(version, out)
-        return version
+        return base + 1
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (metadata-only append version)."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         constraints = dict(manifest.get("constraints", {}))
         if name not in constraints:
             raise ValueError(f"no constraint {name!r} on this table")
         del constraints[name]
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        version = base + 1
-        out.update(
-            {
-                "version": version,
-                "mode": "append",
-                "committed_at": __import__("time").time(),
-            }
+        self._publish(
+            base + 1, _successor(manifest, "append", constraints=constraints)
         )
-        if constraints:
-            out["constraints"] = constraints
-        else:
-            out.pop("constraints", None)
-        self._publish(version, out)
-        return version
+        return base + 1
 
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN via NAME MAPPING (Delta's column
@@ -4228,10 +3919,7 @@ class SnapshotTable:
         expressions mentioning it, or the partition layout (identity or
         transform source) — resolve those first (OPTIMIZE, drop the
         constraint, evolve the layout)."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         schema = json.loads(manifest["schema"])
         names = [f["name"] for f in schema["fields"]]
         if old not in names:
@@ -4279,27 +3967,20 @@ class SnapshotTable:
         for f in schema["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        version = base + 1
-        out.update(
-            {
-                "version": version,
-                "mode": "append",  # same file set: streams skip clean
-                "schema": json.dumps(schema),
-                # mixed logical/physical file generations must route
-                # through the per-commit-group scan path
-                "evolved": True,
-                "committed_at": __import__("time").time(),
-            }
+        # mode append: same file set, streams skip clean. ``evolved``:
+        # mixed logical/physical file generations must route through the
+        # per-commit-group scan path
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "append",
+                schema=json.dumps(schema),
+                evolved=True,
+                column_mapping=mapping,
+            ),
         )
-        if mapping:
-            out["column_mapping"] = mapping
-        else:
-            out.pop("column_mapping", None)
-        self._publish(version, out)
-        return version
+        return base + 1
 
     def drop_column(self, col: str) -> int:
         """ALTER TABLE DROP COLUMN, metadata-only: the field leaves the
@@ -4308,10 +3989,7 @@ class SnapshotTable:
         recorded as RETIRED so a later merge_schema add of the same name
         cannot silently resurrect stale bytes from pre-drop files. Same
         entanglement refusals as rename."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        manifest = self._read_manifest(base)
+        base, manifest = self._head()
         schema = json.loads(manifest["schema"])
         names = [f["name"] for f in schema["fields"]]
         if col not in names:
@@ -4340,26 +4018,18 @@ class SnapshotTable:
             f for f in schema["fields"] if f["name"] != col
         ]
         retired = sorted(set(manifest.get("retired_columns", [])) | {physical})
-        out = dict(manifest)
-        out.pop("txn", None)
-        out.pop("change_data", None)  # images are version-local
-        version = base + 1
-        out.update(
-            {
-                "version": version,
-                "mode": "append",
-                "schema": json.dumps(schema),
-                "evolved": True,
-                "retired_columns": retired,
-                "committed_at": __import__("time").time(),
-            }
+        self._publish(
+            base + 1,
+            _successor(
+                manifest,
+                "append",
+                schema=json.dumps(schema),
+                evolved=True,
+                retired_columns=retired,
+                column_mapping=mapping,
+            ),
         )
-        if mapping:
-            out["column_mapping"] = mapping
-        else:
-            out.pop("column_mapping", None)
-        self._publish(version, out)
-        return version
+        return base + 1
 
     def count(
         self,
@@ -4693,31 +4363,6 @@ _ROW_PRESERVING_MODES = frozenset(
 )
 
 
-def _dv_dirs_by_file(m: dict) -> dict:
-    out: dict[str, list] = {}
-    for d in m.get("dvs") or []:
-        for f in d["files"]:
-            out.setdefault(f, []).append(d["dir"])
-    return {f: tuple(sorted(ds)) for f, ds in out.items()}
-
-
-def _mask_signatures(m: dict) -> dict:
-    """Per-file (applicable tombstone paths, dv dirs) — the complete
-    row-visibility state of a file within its manifest. Two manifests
-    carrying a file with EQUAL signatures serve byte-identical live rows
-    from it (immutable data + identical masks), which is what lets the
-    row-level feed restrict its scans to files whose signature CHANGED."""
-    seqs = m.get("file_seq", {})
-    ts = m.get("tombstones") or []
-    dvs = _dv_dirs_by_file(m)
-    out = {}
-    for f in m["files"]:
-        s = seqs.get(f, -1)
-        tombs = tuple(sorted(t["path"] for t in ts if t["seq"] > s))
-        out[f] = (tombs, dvs.get(f, ()))
-    return out
-
-
 def _align_to(df: DataFrame, target: DataFrame) -> DataFrame:
     """Project ``df`` to ``target``'s schema: null-fill columns only the
     target has (additive evolution), cast columns whose type widened
@@ -4799,7 +4444,7 @@ def _row_changes_between(
             out = out.unionByName(p)
         return out
     pf, cf = set(pm["files"]), set(cm["files"])
-    psig, csig = _mask_signatures(pm), _mask_signatures(cm)
+    psig, csig = _file_masks(pm, pm["files"]), _file_masks(cm, cm["files"])
     affected_prev = [
         f for f in pm["files"] if f not in cf or psig[f] != csig[f]
     ]
