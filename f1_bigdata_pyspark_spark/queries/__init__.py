@@ -23,6 +23,7 @@ from f1_bigdata_pyspark_spark.queries import dedup_pipeline  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import similarity  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import multimodal  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import extended  # noqa: E402,F401
+from f1_bigdata_pyspark_spark.queries import snapshot_faces  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import tpch_more  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import sessions  # noqa: E402,F401
 from f1_bigdata_pyspark_spark.queries import sketches  # noqa: E402,F401

@@ -1279,87 +1279,84 @@ FROM events
 )
 def statestore_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from f1_bigdata_pyspark_spark.streaming.state_audit import (
         read_aggregation_state,
         state_key_skew,
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
+    from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    root = tempfile.mkdtemp(prefix="state_audit_")
-    src, ckpt = os.path.join(root, "src"), os.path.join(root, "ck")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        ev.write.parquet(src)
-        # state partition count is captured from this conf at checkpoint
-        # creation — pin it so the fixture (and the oracle's literal 8)
-        # is session-independent, restore after
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # the store's value schema carries the PHYSICAL accumulator name
-        state = materialize(
-            read_aggregation_state(spark, ckpt).select(
-                "user_id", F.col("count").alias("n"), "partition_id"
+    with scratch_dir("state_audit_") as root:
+        src, ckpt = os.path.join(root, "src"), os.path.join(root, "ck")
+        try:
+            ev.write.parquet(src)
+            # state partition count is captured from this conf at checkpoint
+            # creation — pin it so the fixture (and the oracle's literal 8)
+            # is session-independent, restore after
+            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            q = (
+                spark.readStream.schema(ev.schema)
+                .parquet(src)
+                .groupBy("user_id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .writeStream.format("noop")
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        )
-        batch = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-        sv = state.select("user_id", "n")
+            q.awaitTermination(120)
+            # the store's value schema carries the PHYSICAL accumulator name
+            state = materialize(
+                read_aggregation_state(spark, ckpt).select(
+                    "user_id", F.col("count").alias("n"), "partition_id"
+                )
+            )
+            batch = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+            sv = state.select("user_id", "n")
 
-        # r12: each multiset-equality check as ONE signed-union job
-        # (utils.multisets_equal, guide §1.2) — was two exceptAll+count
-        # jobs per check, each rescanning both sides. The scalar columns
-        # fold into one aggregate over the state (was two more jobs),
-        # and the three independent jobs run concurrently (guide §2.6).
-        from f1_bigdata_pyspark_spark.utils import multisets_equal
+            # r12: each multiset-equality check as ONE signed-union job
+            # (utils.multisets_equal, guide §1.2) — was two exceptAll+count
+            # jobs per check, each rescanning both sides. The scalar columns
+            # fold into one aggregate over the state (was two more jobs),
+            # and the three independent jobs run concurrently (guide §2.6).
+            from f1_bigdata_pyspark_spark.utils import multisets_equal
 
-        skew = state_key_skew(spark, ckpt)
-        planned = (
-            batch.select(
-                F.pmod(F.hash("user_id"), F.lit(8)).alias("partition_id")
+            skew = state_key_skew(spark, ckpt)
+            planned = (
+                batch.select(
+                    F.pmod(F.hash("user_id"), F.lit(8)).alias("partition_id")
+                )
+                .groupBy("partition_id")
+                .agg(F.count(F.lit(1)).alias("n_keys"))
             )
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("n_keys"))
-        )
-        from concurrent.futures import ThreadPoolExecutor
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            state_eq_f = pool.submit(multisets_equal, sv, batch)
-            skew_eq_f = pool.submit(multisets_equal, skew, planned)
-            scalars_f = pool.submit(
-                lambda: state.agg(
-                    F.countDistinct("user_id").alias("u"),
-                    F.sum("n").alias("r"),
-                ).head()
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                state_eq_f = pool.submit(multisets_equal, sv, batch)
+                skew_eq_f = pool.submit(multisets_equal, skew, planned)
+                scalars_f = pool.submit(
+                    lambda: state.agg(
+                        F.countDistinct("user_id").alias("u"),
+                        F.sum("n").alias("r"),
+                    ).head()
+                )
+                state_eq = state_eq_f.result()
+                skew_eq = skew_eq_f.result()
+                scalars = scalars_f.result()
+            n_users = scalars["u"]
+            n_rows = scalars["r"]
+            out = materialize(
+                spark.createDataFrame(
+                    [(8, n_users, int(n_rows), state_eq, skew_eq)],
+                    "n_partitions long, n_users long, n_events_in_state long, "
+                    "state_equals_batch boolean, skew_matches_planned boolean",
+                )
             )
-            state_eq = state_eq_f.result()
-            skew_eq = skew_eq_f.result()
-            scalars = scalars_f.result()
-        n_users = scalars["u"]
-        n_rows = scalars["r"]
-        out = materialize(
-            spark.createDataFrame(
-                [(8, n_users, int(n_rows), state_eq, skew_eq)],
-                "n_partitions long, n_users long, n_events_in_state long, "
-                "state_equals_batch boolean, skew_matches_planned boolean",
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(root, ignore_errors=True)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return out
 
 
@@ -1408,105 +1405,102 @@ FROM g
 )
 def stream_session_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from pyspark.sql import Window
 
-    from f1_bigdata_pyspark_spark.utils import materialize
+    from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    root = tempfile.mkdtemp(prefix="sess_parity_")
-    src = os.path.join(root, "src")
     sink = "sess_parity_" + uuid.uuid4().hex[:8]
-    try:
-        ev.write.parquet(src)
-        q = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src)
-            .withWatermark("ts", "0 seconds")
-            .groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        stream_sessions = materialize(
-            spark.table(sink).select(
-                "user_id",
-                F.col("session_window.start").alias("st"),
-                F.col("session_window.end").alias("en"),
-                "n",
+    with scratch_dir("sess_parity_") as root:
+        src = os.path.join(root, "src")
+        try:
+            ev.write.parquet(src)
+            q = (
+                spark.readStream.schema(ev.schema)
+                .parquet(src)
+                .withWatermark("ts", "0 seconds")
+                .groupBy("user_id", F.session_window("ts", "30 minutes"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
             )
-        )
-        w = Window.partitionBy("user_id").orderBy("ts")
-        brk = F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")
-                >= 1800
-            ),
-            1,
-        ).otherwise(0)
-        batch_sessions = (
-            ev.withColumn("brk", brk)
-            .withColumn(
-                "sid",
-                F.sum("brk").over(
-                    Window.partitionBy("user_id")
-                    .orderBy("ts")
-                    .rowsBetween(Window.unboundedPreceding, 0)
+            q.awaitTermination(180)
+            stream_sessions = materialize(
+                spark.table(sink).select(
+                    "user_id",
+                    F.col("session_window.start").alias("st"),
+                    F.col("session_window.end").alias("en"),
+                    "n",
+                )
+            )
+            w = Window.partitionBy("user_id").orderBy("ts")
+            brk = F.when(
+                F.lag("ts").over(w).isNull()
+                | (
+                    F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")
+                    >= 1800
                 ),
+                1,
+            ).otherwise(0)
+            batch_sessions = (
+                ev.withColumn("brk", brk)
+                .withColumn(
+                    "sid",
+                    F.sum("brk").over(
+                        Window.partitionBy("user_id")
+                        .orderBy("ts")
+                        .rowsBetween(Window.unboundedPreceding, 0)
+                    ),
+                )
+                .groupBy("user_id", "sid")
+                .agg(
+                    F.min("ts").alias("st"),
+                    (F.max("ts") + F.expr("INTERVAL 30 MINUTES")).alias("en"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .select("user_id", "st", "en", "n")
             )
-            .groupBy("user_id", "sid")
-            .agg(
-                F.min("ts").alias("st"),
-                (F.max("ts") + F.expr("INTERVAL 30 MINUTES")).alias("en"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("user_id", "st", "en", "n")
-        )
-        # r12: stream≡batch as ONE signed-union job (was two exceptAll
-        # counts, each re-evaluating both session pipelines), run
-        # concurrently with the summary aggregate (guide §1.2/§2.6).
-        from concurrent.futures import ThreadPoolExecutor
+            # r12: stream≡batch as ONE signed-union job (was two exceptAll
+            # counts, each re-evaluating both session pipelines), run
+            # concurrently with the summary aggregate (guide §1.2/§2.6).
+            from concurrent.futures import ThreadPoolExecutor
 
-        from f1_bigdata_pyspark_spark.utils import multisets_equal
+            from f1_bigdata_pyspark_spark.utils import multisets_equal
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            eq_f = pool.submit(multisets_equal, stream_sessions, batch_sessions)
-            summary_f = pool.submit(
-                lambda: stream_sessions.agg(
-                    F.count(F.lit(1)).cast("long").alias("n_sessions"),
-                    F.countDistinct("user_id").cast("long").alias("n_users"),
-                    F.sum("n").cast("long").alias("n_events"),
-                    F.max("n").cast("long").alias("max_session_events"),
-                ).head()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                eq_f = pool.submit(multisets_equal, stream_sessions, batch_sessions)
+                summary_f = pool.submit(
+                    lambda: stream_sessions.agg(
+                        F.count(F.lit(1)).cast("long").alias("n_sessions"),
+                        F.countDistinct("user_id").cast("long").alias("n_users"),
+                        F.sum("n").cast("long").alias("n_events"),
+                        F.max("n").cast("long").alias("max_session_events"),
+                    ).head()
+                )
+                eq = eq_f.result()
+                summary = summary_f.result()
+            out = materialize(
+                spark.createDataFrame(
+                    [
+                        (
+                            summary.n_sessions,
+                            summary.n_users,
+                            summary.n_events,
+                            summary.max_session_events,
+                            eq,
+                        )
+                    ],
+                    "n_sessions long, n_users long, n_events long, "
+                    "max_session_events long, stream_equals_batch boolean",
+                )
             )
-            eq = eq_f.result()
-            summary = summary_f.result()
-        out = materialize(
-            spark.createDataFrame(
-                [
-                    (
-                        summary.n_sessions,
-                        summary.n_users,
-                        summary.n_events,
-                        summary.max_session_events,
-                        eq,
-                    )
-                ],
-                "n_sessions long, n_users long, n_events long, "
-                "max_session_events long, stream_equals_batch boolean",
-            )
-        )
-    finally:
-        spark.catalog.dropTempView(sink) if sink in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(root, ignore_errors=True)
+        finally:
+            spark.catalog.dropTempView(sink) if sink in [
+                t.name for t in spark.catalog.listTables()
+            ] else None
     return out

@@ -11,9 +11,6 @@ the bucketing/assignment is engine-independent and hash-checkable.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-from contextlib import contextmanager
 from typing import NamedTuple
 
 import pandas as pd
@@ -29,7 +26,7 @@ from f1_bigdata_pyspark_spark.operators.similarity import (
     similarity_threshold,
 )
 from f1_bigdata_pyspark_spark.queries.registry import query
-from f1_bigdata_pyspark_spark.utils import materialize
+from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
 _QUERY_VEC_ID = 0
 
@@ -97,18 +94,6 @@ def _append_cells(
         mode="append",
         partition_by=["centroid_id"],
     )
-
-
-@contextmanager
-def _scratch_dir():
-    """A temporary directory for the index a face builds, removed on exit.
-    The face must ``materialize`` its result inside the block: the driver
-    collects later, when the index files are gone."""
-    root = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        yield root
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _top20(cells: DataFrame, q: Column) -> DataFrame:
@@ -2180,7 +2165,7 @@ def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
 
     emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
-    with _scratch_dir() as root:
+    with scratch_dir("ivf_index_") as root:
         table = SnapshotTable(root)
         _append_cells(table, emb, centroids)
         where = [("centroid_id", "in", probe)]
@@ -2232,7 +2217,7 @@ def ivf_pq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = _pq_index(spark, sf_dir)
     probed_cells = [r.cid for r in _pq_probed(pq).collect()]
     index_rows = pq.codes.join(pq.assign, "vec_id")  # vec_id, m, code, cell
-    with _scratch_dir() as root:
+    with scratch_dir("ivf_index_") as root:
         table = SnapshotTable(root)
         table.commit(  # per-cell writers: see _append_cells
             index_rows.repartition(_PQ_SEED, "cell"),
@@ -2305,7 +2290,7 @@ def ivf_index_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
     is_new = (F.col("vec_id") >= 16) & (F.col("vec_id") % 5 == 0)
-    with _scratch_dir() as root:
+    with scratch_dir("ivf_index_") as root:
         table = SnapshotTable(root)
         for batch_filter in (~is_new, is_new):  # base build, then the day's
             # arrivals: ONLY this batch is assigned and written
@@ -2349,7 +2334,7 @@ def ivf_index_delete_unindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
 
     emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
-    with _scratch_dir() as root:
+    with scratch_dir("ivf_index_") as root:
         table = SnapshotTable(root)
         _append_cells(table, emb, centroids)
         files_before = len(
@@ -2448,7 +2433,7 @@ def ivf_hot_cell_split_rebalance(
         F.lit(0).cast("long").alias("subcell"),
         "embedding",
     )
-    with _scratch_dir() as root:
+    with scratch_dir("ivf_index_") as root:
         table = SnapshotTable(root)
         table.commit(  # two-level layout from day one: (cell, subcell=0)
             index_rows.repartition(16, "centroid_id"),
@@ -2559,7 +2544,7 @@ def ivf_index_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_bigdata_pyspark_spark.utils import multisets_equal
 
     emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
-    with _scratch_dir() as tmp:
+    with scratch_dir("ivf_index_") as tmp:
         corpus = SnapshotTable(os.path.join(tmp, "corpus"))
         index = SnapshotTable(os.path.join(tmp, "index"))
         cursor = None
@@ -2642,7 +2627,7 @@ def ivf_index_cdc_across_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, centroids, q, probe = _ivf_search_inputs(spark, sf_dir)
     m = emb.agg(F.max("vec_id")).head()[0]
     d_lo, d_hi = m // 4, m // 2
-    with _scratch_dir() as tmp:
+    with scratch_dir("ivf_index_") as tmp:
         corpus = SnapshotTable(os.path.join(tmp, "corpus"))
         index = SnapshotTable(os.path.join(tmp, "index"))
         cursor = None

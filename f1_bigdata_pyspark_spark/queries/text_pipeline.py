@@ -4345,15 +4345,12 @@ ORDER BY h.source"""
 
 @query("packed_token_shards", oracle=_packed_shards_oracle(2, 64))
 def packed_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from f1_bigdata_pyspark_spark.functions.text import md5_long
     from f1_bigdata_pyspark_spark.operators.bpe import bpe_apply
     from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize
+    from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
     L = 64
     docs = load_table(spark, sf_dir, "documents")
@@ -4465,8 +4462,7 @@ def packed_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("ids"),
     )
-    root = tempfile.mkdtemp(prefix="token_shards_")
-    try:
+    with scratch_dir("token_shards_") as root:
         table = SnapshotTable(root)
         table.commit(  # per-source shard writers, one file per source
             padded.repartition(8, "source"),
@@ -4516,8 +4512,6 @@ def packed_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 

@@ -2187,11 +2187,13 @@ def register(spark) -> None:
     new wrapper around an already-registered JVM session — merely
     re-registers, which was the previous behavior for every call.
 
-    The CONF set is deliberately NOT guarded: several faces (and tests)
-    save/restore or flip the conf around their scans, so register() must
-    re-establish it every call — guarding both broke 7 served faces in
-    the driver-sim (the face that restored "false" stuck for the rest of
-    the session).
+    The CONF set is deliberately NOT guarded, and register() is its one
+    owner in the package: a lazily returned face (snapshot_served_dv_scan)
+    needs pushdown on when the caller collects, long after the face
+    returned, so no face saves and restores it. Tests that flip the conf
+    rely on the next register() call to re-establish it — guarding both
+    broke 7 served faces in a registry-wide run (a restored "false" stuck for
+    the rest of the session).
 
     The data-source workers import this package, so the package root goes
     on their path first: a session the caller built itself (not through
@@ -2227,6 +2229,19 @@ def _collect_plan_refs(jplan, refs: set) -> None:
     _walk(jplan)
 
 
+def _referenced_names(df) -> set:
+    """Every attribute name the analyzed plan of ``df`` references
+    (``_collect_plan_refs``), plus the names of its output columns: a
+    plan that ends in a filter or a join passes scan columns through
+    without any node referencing them."""
+    plan = df._jdf.queryExecution().analyzed()
+    refs: set[str] = set()
+    _collect_plan_refs(plan, refs)
+    out = plan.output()
+    refs.update(out.apply(i).name() for i in range(out.size()))
+    return refs
+
+
 def _schema_stand_in(spark, root: str, options: dict):
     """An empty frame with the schema ``format("snapshot")`` serves for
     ``root`` and ``options``, from ``SnapshotDataSource.schema()`` run in
@@ -2252,8 +2267,8 @@ def served_read(spark, root: str, build, **options):
        served schema (``_schema_stand_in``) — nothing executes; only the
        ANALYZED logical plan is inspected,
     2. walk that plan's nodes collecting every referenced attribute
-       name (filters, join keys, aggregates — not just the output, so a
-       filter-only column is kept),
+       name (filters, join keys, aggregates, so a filter-only column is
+       kept) and the names of its output columns,
     3. plan ``build`` against the real scan, carrying
        ``columns=<referenced ∩ table columns>`` — the executor read
        then fetches only those byte ranges (parquet is columnar).
@@ -2277,8 +2292,7 @@ def served_read(spark, root: str, build, **options):
     if "columns" in options:
         return build(scan())
     stand_in = _schema_stand_in(spark, root, options)
-    refs: set[str] = set()
-    _collect_plan_refs(build(stand_in)._jdf.queryExecution().analyzed(), refs)
+    refs = _referenced_names(build(stand_in))
     # committed order, so the derived option is deterministic
     need = [c for c in stand_in.columns if c in refs]
     if not need or len(need) == len(stand_in.columns):
@@ -2305,8 +2319,7 @@ def served_read_tables(spark, roots: dict, build, report: dict | None = None):
     caller can pin the width arithmetic. The derivation pass plans over
     empty stand-ins, as in ``served_read``."""
     stand_ins = {n: _schema_stand_in(spark, r, {}) for n, r in roots.items()}
-    refs: set[str] = set()
-    _collect_plan_refs(build(stand_ins)._jdf.queryExecution().analyzed(), refs)
+    refs = _referenced_names(build(stand_ins))
 
     def full(r):
         return spark.read.format("snapshot").option("root", r).load()

@@ -1539,9 +1539,16 @@ class SnapshotTable:
         self._fs.replace_atomic(path, json.dumps(full))
         return True
 
-    def _publish(self, version: int, manifest: dict) -> None:
+    def _publish(
+        self, version: int, manifest: dict, base_manifest: dict | None = None
+    ) -> None:
         """Atomically publish the manifest for ``version`` (write temp +
         rename). Raises SnapshotConflictError if the version exists.
+
+        ``base_manifest``: the resolved manifest the caller built on.
+        When it is version N−1 the delta encoder uses it as is, instead of
+        resolving N−1 again (up to ``_CHECKPOINT_EVERY`` reads); any other
+        base (a rebased commit, a rollback, none) reads N−1 from the log.
 
         Every published manifest carries ``committed_at`` — stamped HERE,
         not per-path, so no commit mode can forget it (a rollback once
@@ -1558,10 +1565,12 @@ class SnapshotTable:
         # encoder declines) stays a self-contained checkpoint
         encoded = manifest
         if version % _CHECKPOINT_EVERY != 0 and version > 0:
-            try:
-                base = self._read_manifest(version - 1)
-            except (FileNotFoundError, ValueError):
-                base = None
+            base = base_manifest
+            if base is None or base.get("version") != version - 1:
+                try:
+                    base = self._read_manifest(version - 1)
+                except (FileNotFoundError, ValueError):
+                    base = None
             if base is not None:
                 encoded = (
                     _encode_manifest_delta(manifest, base) or manifest
@@ -1892,7 +1901,7 @@ class SnapshotTable:
                 hook, _before_publish = _before_publish, None
                 hook()
             try:
-                self._publish(version, manifest)
+                self._publish(version, manifest, base_manifest=head_manifest)
                 return version
             except SnapshotConflictError:
                 if on_conflict != "rebase":
@@ -1989,7 +1998,7 @@ class SnapshotTable:
                 hook, _before_publish = _before_publish, None
                 hook()
             try:
-                self._publish(version, manifest)
+                self._publish(version, manifest, base_manifest=head)
                 return version
             except SnapshotConflictError:
                 if on_conflict != "rebase" or mode != "append":
@@ -2358,7 +2367,7 @@ class SnapshotTable:
                 hook, _before_publish = _before_publish, None
                 hook()
             try:
-                self._publish(version, out)
+                self._publish(version, out, base_manifest=cur)
                 return {
                     "version": version,
                     "files_rewritten": len(touched_files),
@@ -2477,7 +2486,9 @@ class SnapshotTable:
         # change data (round 11): old live rows of the replaced region vs
         # the replacement frame — exceptAll cancels re-written identical
         # rows, matching the feed's generic diff semantics exactly
-        region = self._scan_with_tombstones(spark, manifest, sorted(removed))
+        region = self._scan_with_tombstones(
+            spark, manifest, [f for f in manifest["files"] if f in removed]
+        )
         cd_entry = self._write_change_data(
             {
                 "delete": region.exceptAll(df),
@@ -2495,6 +2506,7 @@ class SnapshotTable:
                 new=(new_files, new_stats, new_partitions),
                 change_data=cd_entry,
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -2653,6 +2665,7 @@ class SnapshotTable:
                 carried=carried,
                 new=(new_files, new_stats, new_partitions),
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -2711,6 +2724,7 @@ class SnapshotTable:
                 "dv-consolidate",
                 dvs=[{"dir": dv_dir, "files": named, "n_buckets": dv_buckets}],
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -2784,6 +2798,7 @@ class SnapshotTable:
                 carried=large,
                 new=(new_files, new_stats, new_partitions),
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -2865,6 +2880,7 @@ class SnapshotTable:
             _successor(
                 manifest, "append", op="refresh-stats", stats=out_stats
             ),
+            base_manifest=manifest,
         )
         return {"version": base + 1, "files_refreshed": len(todo)}
 
@@ -2921,6 +2937,7 @@ class SnapshotTable:
                 version=version,
                 change_data=cd_entry,
             ),
+            base_manifest=target,
         )
         return version
 
@@ -3002,6 +3019,7 @@ class SnapshotTable:
                 + [{"path": f, "seq": version} for f in new_files],
                 tombstone_keys=keys,
             ),
+            base_manifest=manifest,
         )
         return {"version": version, "n_tombstoned": n}
 
@@ -3158,7 +3176,7 @@ class SnapshotTable:
             )
             version = out["version"]
             try:
-                self._publish(version, out)
+                self._publish(version, out, base_manifest=manifest)
             except SnapshotConflictError:
                 if expected_base_version is not None:
                     raise  # the caller pinned the base: no rebase
@@ -3298,6 +3316,7 @@ class SnapshotTable:
                 new=(new_files, new_stats, new_partitions),
                 dvs=(manifest.get("dvs") or []) + [record],
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -3407,6 +3426,7 @@ class SnapshotTable:
                 new=(new_files, new_stats, new_partitions),
                 change_data=cd_entry,
             ),
+            base_manifest=manifest,
         )
         return {
             "version": base + 1,
@@ -3699,6 +3719,9 @@ class SnapshotTable:
         # and would drop or mis-type the columns the other commits carry).
         # Whether a group is partitioned is decided PER GROUP (partition
         # evolution mixes laid-out and flat commits in one live file set).
+        # Groups union in the order their files first appear in ``files``
+        # (never by their random dir names), so a rewrite over this scan
+        # writes its rows in the same order on every run.
         by_commit: dict[str, list[str]] = {}
         for f in files:
             by_commit.setdefault(_commit_root_of(f), []).append(f)
@@ -3712,7 +3735,7 @@ class SnapshotTable:
         prev_inf = conf.get(inf_key, None)
         conf.set(inf_key, "false")
         try:
-            for root, fs in sorted(by_commit.items()):
+            for root, fs in by_commit.items():
                 r = spark.read
                 if any(part_values.get(f) for f in fs):
                     r = r.option("basePath", root)
@@ -3888,7 +3911,9 @@ class SnapshotTable:
         constraints[name] = expr
         # mode append: same file set, streams skip it clean
         self._publish(
-            base + 1, _successor(manifest, "append", constraints=constraints)
+            base + 1,
+            _successor(manifest, "append", constraints=constraints),
+            base_manifest=manifest,
         )
         return base + 1
 
@@ -3900,7 +3925,9 @@ class SnapshotTable:
             raise ValueError(f"no constraint {name!r} on this table")
         del constraints[name]
         self._publish(
-            base + 1, _successor(manifest, "append", constraints=constraints)
+            base + 1,
+            _successor(manifest, "append", constraints=constraints),
+            base_manifest=manifest,
         )
         return base + 1
 
@@ -3979,6 +4006,7 @@ class SnapshotTable:
                 evolved=True,
                 column_mapping=mapping,
             ),
+            base_manifest=manifest,
         )
         return base + 1
 
@@ -4028,6 +4056,7 @@ class SnapshotTable:
                 retired_columns=retired,
                 column_mapping=mapping,
             ),
+            base_manifest=manifest,
         )
         return base + 1
 

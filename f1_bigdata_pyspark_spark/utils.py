@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 
@@ -18,6 +22,18 @@ def fs_path_exists(spark, path: str) -> bool:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
+
+
+@contextmanager
+def scratch_dir(prefix: str):
+    """A temporary directory named ``<prefix>…``, removed on exit. A query
+    that builds tables in it must ``materialize`` its result inside the
+    block: the driver collects later, when the files are gone."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -41,7 +41,7 @@ class CheckThenPutFS(LocalMetadataFS):
     write, the second silently overwrites the first: the hazard the
     coordinator must close."""
 
-    def __init__(self, pause: threading.Event | None = None):
+    def __init__(self, pause: threading.Barrier | None = None):
         self.pause = pause
         self.puts: list[str] = []
 
@@ -49,7 +49,7 @@ class CheckThenPutFS(LocalMetadataFS):
         if os.path.exists(path):  # the HEAD probe
             raise FileExistsError(path)
         if self.pause is not None:
-            self.pause.wait(5)  # both racers sit here after probing
+            self.pause.wait(5)  # both racers meet here after probing
         with open(path, "w", encoding="utf-8") as f:  # the blind PUT
             f.write(data)
         self.puts.append(path)
@@ -58,8 +58,9 @@ class CheckThenPutFS(LocalMetadataFS):
 def test_check_then_put_store_loses_a_commit_without_coordination(tmp_path):
     """Demonstrate the hazard: both racers 'win' and one manifest is
     silently overwritten."""
-    gate = threading.Event()
-    fs = CheckThenPutFS(pause=gate)
+    # a barrier, not an event set by this thread: the event could be set
+    # before one racer probed, letting the other write first
+    fs = CheckThenPutFS(pause=threading.Barrier(2))
     path = str(tmp_path / "v1.json")
     errs: list = []
 
@@ -72,7 +73,6 @@ def test_check_then_put_store_loses_a_commit_without_coordination(tmp_path):
     t1 = threading.Thread(target=committer, args=('{"w": 1}',))
     t2 = threading.Thread(target=committer, args=('{"w": 2}',))
     t1.start(), t2.start()
-    gate.set()
     t1.join(), t2.join()
     assert not errs, "both passed the probe — neither saw a conflict"
     assert len(fs.puts) == 2  # two blind PUTs: one commit vanished

@@ -278,7 +278,10 @@ _MATRIX = [
 @pytest.mark.parametrize(
     "path,mode,own", [r[1:] for r in _MATRIX], ids=[r[0] for r in _MATRIX]
 )
-def test_successor_carry_rules(spark, base, tmp_path, path, mode, own):
+def test_successor_carry_rules(
+    spark, base, tmp_path, monkeypatch, path, mode, own
+):
+    from f1_bigdata_pyspark_spark.sources import snapshots
     from f1_bigdata_pyspark_spark.sources.snapshots import (
         SnapshotTable,
         _carry_dvs,
@@ -286,7 +289,20 @@ def test_successor_carry_rules(spark, base, tmp_path, path, mode, own):
 
     t = _copy_of(base, tmp_path)
     head_v = t.latest_version()
+    # the base a write path hands _publish must be version N-1 exactly as
+    # the log holds it: the delta encoder is a pure function, so the
+    # record is then byte for byte the one a fresh read of N-1 gives
+    encode = snapshots._encode_manifest_delta
+    bases = []
+
+    def spy(full, b):
+        bases.append(b == t._read_manifest(b["version"]))
+        return encode(full, b)
+
+    monkeypatch.setattr(snapshots, "_encode_manifest_delta", spy)
     path(spark, t, tmp_path)
+    assert bases or path is _clone_from, "no delta record was encoded"
+    assert all(bases), "a write path published against a changed base"
     if path is _clone_from:
         # the clone's v0 is the successor of the source's head
         head = t._read_manifest(head_v)
@@ -369,3 +385,44 @@ def test_txn_and_change_data_stay_with_their_version(spark, tmp_path):
     t.rename_column("v1", "v2")
     assert "change_data" not in t._read_manifest(3)
     assert t.last_committed_batch("app") == 7
+
+
+class _CountingFS:
+    """The local metadata filesystem, counting manifest reads."""
+
+    def __init__(self):
+        from f1_bigdata_pyspark_spark.sources.metadata_fs import LocalMetadataFS
+
+        self._fs = LocalMetadataFS()
+        self.reads = 0
+
+    def read_text(self, path: str) -> str:
+        self.reads += 1
+        return self._fs.read_text(path)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_commit_resolves_its_base_once(tmp_path):
+    """A commit nine versions past a checkpoint resolves its base, v8, once
+    (nine manifest reads down the delta chain) and the delta encoder
+    reuses it, where it used to resolve v8 a second time (18 reads)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
+
+    fs = _CountingFS()
+    t = SnapshotTable(str(tmp_path / "t"), fs=fs)
+    schema = '{"type":"struct","fields":[{"name":"k","type":"long",' \
+        '"nullable":true,"metadata":{}}]}'
+    for v in range(10):
+        d = os.path.join(t.data_dir, f"commit-ext{v}")
+        os.makedirs(d)
+        path = os.path.join(d, "part-0.parquet")
+        pq.write_table(pa.table({"k": pa.array([v], pa.int64())}), path)
+        fs.reads = 0
+        assert t.publish_files([path], {path: {}}, schema_json=schema) == v
+    assert "delta_of" in fs._fs.read_text(t._manifest_path(9))
+    assert fs.reads == 9

@@ -1369,6 +1369,50 @@ def test_served_read_full_width_and_explicit_columns(spark, tmp_path):
     assert sorted(r.k for r in explicit.collect()) == [1, 2]
 
 
+def test_served_reads_keep_passed_through_columns(spark, tmp_path):
+    """A served query whose result is not a projection (a bare filter, a
+    bare join) returns every column it passes through, not only the ones
+    a plan node references."""
+    from pyspark.sql import functions as F
+
+    from f1_bigdata_pyspark_spark.sources.snapshot_source import (
+        register,
+        served_read,
+        served_read_tables,
+    )
+
+    register(spark)
+    ra, rb = str(tmp_path / "a"), str(tmp_path / "b")
+    SnapshotTable(ra).commit(
+        spark.createDataFrame(
+            [(1, 10, "x"), (2, 20, "y")], "id long, v long, junk string"
+        ).repartition(1),
+        mode="append",
+    )
+    SnapshotTable(rb).commit(
+        spark.createDataFrame(
+            [(1, 5.0, "p"), (2, 7.0, "q")], "fid long, w double, pad string"
+        ).repartition(1),
+        mode="append",
+    )
+    kept = served_read(spark, ra, lambda df: df.filter(F.col("v") > 15))
+    assert kept.columns == ["id", "v", "junk"]
+    assert [tuple(r) for r in kept.collect()] == [(2, 20, "y")]
+    report: dict = {}
+    joined = served_read_tables(
+        spark,
+        {"a": ra, "b": rb},
+        lambda t: t["a"].join(t["b"], t["a"].id == t["b"].fid),
+        report=report,
+    )
+    assert joined.columns == ["id", "v", "junk", "fid", "w", "pad"]
+    assert report == {"a": (3, 3), "b": (3, 3)}
+    assert sorted(tuple(r) for r in joined.collect()) == [
+        (1, 10, "x", 1, 5.0, "p"),
+        (2, 20, "y", 2, 7.0, "q"),
+    ]
+
+
 def test_served_read_tables_reports_widths(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -1669,3 +1713,17 @@ def test_udf_face_runs_from_another_cwd(sf_smoke, tmp_path):
     ships the function by module path, and the registry sets up the
     session's workers before the face builds its plan."""
     _run_from_another_cwd("label_centroid_cohesion", sf_smoke, tmp_path)
+
+
+def test_served_faces_leave_pushdown_on(spark, sf_smoke):
+    """``register()`` owns ``spark.sql.python.filterPushdown.enabled``: no
+    served face restores it, so after any of them a lazily returned face
+    (its scan plans when the caller collects) still finds pushdown on,
+    whatever the session held before."""
+    from f1_bigdata_pyspark_spark.queries.registry import get_query
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    spark.conf.set(key, "false")
+    for name in ("snapshot_datasource_scan", "snapshot_dv_consolidation_report"):
+        get_query(name).fn(spark, sf_smoke)
+        assert spark.conf.get(key) == "true", name

@@ -1819,11 +1819,11 @@ def test_two_streaming_writers_race_one_table(spark, table):
     orig_publish = table._publish
     raced = {"done": False}
 
-    def racing_publish(version, manifest):
+    def racing_publish(version, manifest, **kw):
         if not raced["done"] and manifest.get("txn", {}).get("app") == "stream-a":
             raced["done"] = True
             sink_b(_df(spark, [(10, "x")]), 0)  # B wins this version
-        return orig_publish(version, manifest)
+        return orig_publish(version, manifest, **kw)
 
     table._publish = racing_publish
     try:
@@ -1995,11 +1995,11 @@ def test_optimize_conflicts_instead_of_dropping_concurrent_rows(spark, table):
     orig = table._publish
     raced = {"done": False}
 
-    def racing(version, manifest):
+    def racing(version, manifest, **kw):
         if not raced["done"] and manifest.get("mode") == "overwrite":
             raced["done"] = True
             table.commit(_df(spark, [(99, "zz")]), mode="append")
-        return orig(version, manifest)
+        return orig(version, manifest, **kw)
 
     table._publish = racing
     try:
@@ -3167,3 +3167,54 @@ def test_rename_cannot_reuse_live_physical_names(spark, table):
     table.rename_column("label", "v")
     assert table.read(spark).columns == ["k", "v"]
     assert [r.v for r in table.read(spark).collect()] == ["a"]
+
+
+def _evolved_then_compacted(spark, root: str) -> list[dict]:
+    """Six commits, the last five widening the schema (so every scan
+    takes the per-commit grouped path), compacted by optimize_incremental
+    into one file: that file's rows in file order."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(root)
+    t.commit(spark.createDataFrame([(0, "a")], "k long, v string"))
+    for k in range(1, 6):
+        t.commit(
+            spark.createDataFrame([(k, "b", float(k))], "k long, v string, w double"),
+            merge_schema=True,
+        )
+    rep = t.optimize_incremental(spark, small_file_max_bytes=1 << 30)
+    assert rep["files_written"] == 1
+    (out,) = t._read_manifest(rep["version"])["files"]
+    return pq.read_table(out).to_pylist()
+
+
+def _replaced_region_images(spark, root: str) -> list[dict]:
+    """Six partitioned commits into ``g=1``, then a replace_where of that
+    partition: the rows of its change-data delete images, file by file."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(root)
+    for k in range(6):
+        t.commit(
+            spark.createDataFrame([(k, 1)], "k long, g long"), partition_by=["g"]
+        )
+    t.replace_where(
+        spark, spark.createDataFrame([(9, 1)], "k long, g long"), [("g", "=", 1)]
+    )
+    files = t._read_manifest(t.latest_version())["change_data"]["types"]["delete"]
+    return [row for f in files for row in pq.read_table(f).to_pylist()]
+
+
+def test_rewrite_row_order_follows_the_manifest(spark, tmp_path):
+    """A rewrite over a grouped-path scan writes its rows in the order the
+    manifest lists their files: the per-commit groups are unioned in first
+    appearance, not in the order of their random commit-dir names, so the
+    same history gives the same compacted bytes, and the same change-data
+    images, on every run."""
+    first = _evolved_then_compacted(spark, str(tmp_path / "a"))
+    second = _evolved_then_compacted(spark, str(tmp_path / "b"))
+    assert [r["k"] for r in first] == list(range(6))
+    assert first == second
+    first = _replaced_region_images(spark, str(tmp_path / "c"))
+    assert sorted(r["k"] for r in first) == list(range(6))
+    assert first == _replaced_region_images(spark, str(tmp_path / "d"))
