@@ -10,18 +10,132 @@ the LSH candidates (tests assert LSH candidates ⊇ high-Jaccard pairs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from f1_bigdata_pyspark_spark.catalog import load_table
-from f1_bigdata_pyspark_spark.functions.text import fingerprint
+from f1_bigdata_pyspark_spark.functions.text import fingerprint, md5_long, tokens
+from f1_bigdata_pyspark_spark.functions.vectors import dot, norm2
 from f1_bigdata_pyspark_spark.operators.dedup import (
     exact_dedup_keep_first,
     minhash_candidates,
     ngram_jaccard_pairs,
+    positioned_shingle_hashes,
+    raw_shingle_hashes,
+    shingle_table,
     simhash_table,
 )
+from f1_bigdata_pyspark_spark.operators.graph import (
+    component_sizes,
+    connected_components,
+)
+from f1_bigdata_pyspark_spark.operators.join_policy import broadcast_if_small
+from f1_bigdata_pyspark_spark.operators.similarity import _hyperplane, ivf_assign
 from f1_bigdata_pyspark_spark.queries.registry import query
+from f1_bigdata_pyspark_spark.queries.text_pipeline import (
+    _ADD1_SCORES_SQL,
+    _BIGRAM_SQL,
+    _PER_DOC_XENT_SQL,
+    _add1_bigram_scores,
+    _bigram_frames,
+    _drawn_or_zero,
+    _n_stopwords,
+    _quota_draw,
+    _quota_draw_sql,
+)
+from f1_bigdata_pyspark_spark.utils import materialize
+
+
+# --------------------------------------------------------------------------
+# Oracle SQL fragments shared by the faces below (and by
+# extended.recursive_cte_components). Each is a comma-joinable CTE list.
+# --------------------------------------------------------------------------
+def _shingle_sql(src: str = "documents", key: str = "doc_id") -> str:
+    """``toks``/``sh``: the distinct word-3-gram shingles ``(key, s)`` of
+    ``src``'s ``text``, keyed by its ``doc_id`` renamed to ``key``."""
+    sel = "doc_id" if key == "doc_id" else f"doc_id AS {key}"
+    return f"""toks AS (
+  SELECT {sel}, string_split(text, ' ') AS t FROM {src}
+), sh AS (
+  SELECT DISTINCT {key}, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
+  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
+)"""
+
+
+def _jaccard_edges_sql(threshold: float, key: str = "doc_id") -> str:
+    """``cnt``/``inter``/``edges``: the exact shingle-Jaccard pairs
+    ``(d1, d2, j)``, ``d1 < d2``, with ``j >= threshold`` (needs ``sh``)."""
+    return f"""cnt AS (
+  SELECT {key}, count(*) AS n FROM sh GROUP BY {key}
+), inter AS (
+  SELECT a.{key} AS d1, b.{key} AS d2, count(*) AS c
+  FROM sh a JOIN sh b ON a.s = b.s AND a.{key} < b.{key}
+  GROUP BY 1, 2
+), edges AS (
+  SELECT d1, d2, c * 1.0 / (ca.n + cb.n - c) AS j FROM inter
+  JOIN cnt ca ON ca.{key} = d1 JOIN cnt cb ON cb.{key} = d2
+  WHERE c * 1.0 / (ca.n + cb.n - c) >= {threshold}
+)"""
+
+
+# ``und``/``reach``/``labels``: connected components of ``edges`` as a
+# recursive transitive closure; each node is labelled with the least node
+# it reaches (itself included).
+_COMPONENTS_SQL = """und AS (
+  SELECT d1 AS a, d2 AS b FROM edges UNION SELECT d2, d1 FROM edges
+), reach AS (
+  WITH RECURSIVE r(a, b) AS (
+    SELECT a, b FROM und
+    UNION
+    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
+  ) SELECT * FROM r
+), labels AS (
+  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
+)"""
+
+# the components of the word-3-gram Jaccard >= 0.2 near-dup graph
+_NEAR_DUP_LABELS_SQL = (
+    f"{_shingle_sql()}, {_jaccard_edges_sql(0.2)}, {_COMPONENTS_SQL}"
+)
+
+# ``xs``/``sig``/``band``/``pairs``/``cand``: MinHash(32) signatures of the
+# ``(doc, s)`` shingles in ``sh``, LSH(8 bands) bucket pairs, and the
+# candidates ``(d1, d2, est_jaccard)`` whose estimate is >= 0.2 — the
+# portable md5-derived hashing of operators/dedup.minhash_candidates.
+_MINHASH_SQL = """xs AS (
+  SELECT doc,
+         CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647 AS xm
+  FROM sh
+), sig AS (
+  SELECT doc, i.i AS i,
+         min((((1103515245 * (i.i + 1)) % 2147483647) * xm + 12345 * i.i)
+             % 2147483647) AS mh
+  FROM xs CROSS JOIN range(32) AS i(i)
+  GROUP BY doc, i.i
+), band AS (
+  SELECT doc, i // 4 AS band,
+         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS bucket
+  FROM sig GROUP BY doc, band
+), pairs AS (
+  SELECT DISTINCT x.doc AS d1, y.doc AS d2
+  FROM band x JOIN band y ON x.band = y.band AND x.bucket = y.bucket
+  WHERE x.doc < y.doc
+), cand AS (
+  SELECT p.d1, p.d2,
+         round(CAST(sum(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS DOUBLE)
+               / 32.0, 6) AS est_jaccard
+  FROM pairs p
+  JOIN sig s1 ON s1.doc = p.d1
+  JOIN sig s2 ON s2.doc = p.d2 AND s2.i = s1.i
+  GROUP BY p.d1, p.d2
+  HAVING round(CAST(sum(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS DOUBLE)
+               / 32.0, 6) >= 0.2
+)"""
+
+# ``e``: the embeddings as DOUBLE lists
+_EMB_SQL = """e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+)"""
 
 
 # --------------------------------------------------------------------------
@@ -46,8 +160,6 @@ ORDER BY doc_id
 """,
 )
 def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", fingerprint(F.col("text")).alias("f")
     )
@@ -63,25 +175,9 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ngram_jaccard_dups",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT d1, d2, round(c * 1.0 / (ca.n + cb.n - c), 6) AS jaccard
-FROM inter
-JOIN cnt ca ON ca.doc_id = d1
-JOIN cnt cb ON cb.doc_id = d2
-WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-ORDER BY d1, d2
+    oracle=f"""
+WITH {_shingle_sql()}, {_jaccard_edges_sql(0.2)}
+SELECT d1, d2, round(j, 6) AS jaccard FROM edges ORDER BY d1, d2
 """,
 )
 def ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,41 +194,9 @@ def ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "minhash_lsh_candidates",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id AS doc, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), xs AS (
-  SELECT doc,
-         CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647 AS xm
-  FROM sh
-), sig AS (
-  SELECT doc, i.i AS i,
-         min((((1103515245 * (i.i + 1)) % 2147483647) * xm + 12345 * i.i)
-             % 2147483647) AS mh
-  FROM xs CROSS JOIN range(32) AS i(i)
-  GROUP BY doc, i.i
-), band AS (
-  SELECT doc, i // 4 AS band,
-         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS bucket
-  FROM sig GROUP BY doc, band
-), pairs AS (
-  SELECT DISTINCT x.doc AS d1, y.doc AS d2
-  FROM band x JOIN band y ON x.band = y.band AND x.bucket = y.bucket
-  WHERE x.doc < y.doc
-)
-SELECT p.d1, p.d2,
-       round(CAST(sum(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS DOUBLE)
-             / 32.0, 6) AS est_jaccard
-FROM pairs p
-JOIN sig s1 ON s1.doc = p.d1
-JOIN sig s2 ON s2.doc = p.d2 AND s2.i = s1.i
-GROUP BY p.d1, p.d2
-HAVING round(CAST(sum(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS DOUBLE)
-             / 32.0, 6) >= 0.2
-ORDER BY d1, d2
+    oracle=f"""
+WITH {_shingle_sql(key="doc")}, {_MINHASH_SQL}
+SELECT d1, d2, est_jaccard FROM cand ORDER BY d1, d2
 """,
     bench=True,
 )
@@ -196,10 +260,8 @@ def simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "embedding_near_dup_pairs",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-)
+    oracle=f"""
+WITH {_EMB_SQL}
 SELECT a.vec_id AS d1, b.vec_id AS d2,
        round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
 FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -208,35 +270,11 @@ ORDER BY d1, d2
 """,
 )
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # Norms precomputed ONCE per vector (float-identical to the inline
-    # cosine: same norm2(a)·norm2(b) denominator), so each of the O(n²)
-    # pairs costs one dot product instead of three interpreted array folds.
     # The materialize barrier stops Catalyst's projection collapse from
-    # inlining that dot into BOTH the filter and the final project (which
-    # would evaluate every pair's fold twice).
-    en = _emb_with_norm(emb)
-    a = en.select(
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-        # r11: pin pair-scan parallelism — the non-equi self-join plans as
-        # BroadcastNestedLoopJoin over the STREAMED side's partitions, and
-        # the embeddings scan is one split, so without this exchange the
-        # whole O(n^2) dot-fold ran on a single task (see _all_pairs_dist)
-    ).repartition(en.sparkSession.sparkContext.defaultParallelism, F.col("d1"))
-    b = en.select(
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    scored = materialize(
-        a.join(b, F.col("d1") < F.col("d2")).select(
-            "d1", "d2", _pair_cosine().alias("cos_sim")
-        )
-    )
+    # inlining the pair's dot into BOTH the filter and the final project
+    # (which would evaluate every pair's fold twice).
+    scored = materialize(_pair_scan(emb))
     return scored.filter(F.col("cos_sim") >= 0.45).orderBy("d1", "d2")
 
 
@@ -249,45 +287,13 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "near_dup_clusters",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc_id = d1
-  JOIN cnt cb ON cb.doc_id = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-), und AS (
-  SELECT d1 AS a, d2 AS b FROM edges
-  UNION SELECT d2, d1 FROM edges
-), reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM und
-    UNION
-    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
-  ) SELECT * FROM r
-), labels AS (
-  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
-)
+    oracle=f"""
+WITH {_NEAR_DUP_LABELS_SQL}
 SELECT comp AS cluster_id, count(*) AS n_docs
 FROM labels GROUP BY comp ORDER BY cluster_id
 """,
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.graph import (
-        component_sizes,
-        connected_components,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2).select(
         "d1", "d2"
@@ -312,7 +318,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "corpus_curation_pipeline",
-    oracle="""
+    oracle=f"""
 WITH quality AS (
   SELECT doc_id, text, source, n_chars FROM documents WHERE n_chars >= 50
 ), fp AS (
@@ -322,32 +328,8 @@ WITH quality AS (
   FROM quality
 ), exact_kept AS (
   SELECT doc_id, text, source, n_chars FROM fp WHERE rn = 1
-), toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM exact_kept
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc_id = d1 JOIN cnt cb ON cb.doc_id = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-), und AS (
-  SELECT d1 AS a, d2 AS b FROM edges UNION SELECT d2, d1 FROM edges
-), reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM und
-    UNION
-    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
-  ) SELECT * FROM r
-), labels AS (
-  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
-), dropped AS (
+), {_shingle_sql("exact_kept")}, {_jaccard_edges_sql(0.2)},
+{_COMPONENTS_SQL}, dropped AS (
   SELECT node FROM labels WHERE node <> comp
 ), curated AS (
   SELECT k.doc_id, k.source, k.n_chars FROM exact_kept k
@@ -366,10 +348,6 @@ FROM split GROUP BY split ORDER BY split
 """,
 )
 def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from f1_bigdata_pyspark_spark.operators.graph import connected_components
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     quality = docs.filter(F.col("n_chars") >= 50)
     fp = quality.withColumn("f", fingerprint(F.col("text")))
@@ -413,55 +391,16 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "lsh_quality_report",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id AS doc, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc, count(*) AS n FROM sh GROUP BY doc
-), inter AS (
-  SELECT a.doc AS d1, b.doc AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc < b.doc
-  GROUP BY 1, 2
-), exact AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc = d1 JOIN cnt cb ON cb.doc = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.5
-), xs AS (
-  SELECT doc,
-         CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647 AS xm
-  FROM sh
-), sig AS (
-  SELECT doc, i.i AS i,
-         min((((1103515245 * (i.i + 1)) % 2147483647) * xm + 12345 * i.i)
-             % 2147483647) AS mh
-  FROM xs CROSS JOIN range(32) AS i(i)
-  GROUP BY doc, i.i
-), band AS (
-  SELECT doc, i // 4 AS band,
-         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i)) AS bucket
-  FROM sig GROUP BY doc, band
-), pairs AS (
-  SELECT DISTINCT x.doc AS d1, y.doc AS d2
-  FROM band x JOIN band y ON x.band = y.band AND x.bucket = y.bucket
-  WHERE x.doc < y.doc
-), cand AS (
-  SELECT p.d1, p.d2 FROM pairs p
-  JOIN sig s1 ON s1.doc = p.d1
-  JOIN sig s2 ON s2.doc = p.d2 AND s2.i = s1.i
-  GROUP BY p.d1, p.d2
-  HAVING round(CAST(sum(CASE WHEN s1.mh = s2.mh THEN 1 ELSE 0 END) AS DOUBLE)
-               / 32.0, 6) >= 0.2
-), hits AS (
-  SELECT count(*) AS n_hit FROM exact e
+    oracle=f"""
+WITH {_shingle_sql(key="doc")}, {_jaccard_edges_sql(0.5, key="doc")},
+{_MINHASH_SQL}, hits AS (
+  SELECT count(*) AS n_hit FROM edges e
   JOIN cand c ON e.d1 = c.d1 AND e.d2 = c.d2
 )
-SELECT (SELECT count(*) FROM exact) AS n_exact,
+SELECT (SELECT count(*) FROM edges) AS n_exact,
        (SELECT count(*) FROM cand) AS n_candidates,
        n_hit,
-       round(n_hit * 1.0 / nullif((SELECT count(*) FROM exact), 0), 6)
+       round(n_hit * 1.0 / nullif((SELECT count(*) FROM edges), 0), 6)
          AS recall,
        round(n_hit * 1.0 / nullif((SELECT count(*) FROM cand), 0), 6)
          AS precision
@@ -561,8 +500,6 @@ ORDER BY d.source
 """,
 )
 def duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.dedup import raw_shingle_hashes
-
     docs = load_table(spark, sf_dir, "documents")
     sh = raw_shingle_hashes(docs, "doc_id", "text", 8)  # distinct (doc, xm)
     shared = (
@@ -620,15 +557,14 @@ _LSH_DEDUP_BANDS = 2
 _EMB_DEDUP_THRESHOLD = 0.45
 
 
-def _banded_bucket_sql() -> str:
-    """DuckDB CTE fragment reproducing the banded hyperplane buckets —
-    the sin-sequence planes of operators/similarity.lsh_buckets, grouped
-    into bands of 3, so (band, bucket) pairs match Spark bit for bit."""
-    return f"""
-e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), x AS (
-  SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS j FROM e
+def _banded_bucket_sql(src: str) -> str:
+    """DuckDB CTE fragment reproducing the banded hyperplane buckets of the
+    ``(vec_id, v)`` rows of CTE ``src`` — the sin-sequence planes of
+    operators/similarity.lsh_buckets, grouped into bands of 3, so (band,
+    bucket) pairs match Spark bit for bit."""
+    return f"""x AS (
+  SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS j
+  FROM {src}
 ), bits AS (
   SELECT x.vec_id, p.p,
          CASE WHEN sum(x.val * sin(1000003 * p.p + x.j)) >= 0
@@ -645,9 +581,6 @@ def _banded_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, band, bucket) from the shared sin-plane sequence: plane p
     contributes bit (p mod 3) of band (p div 3). One narrow map — the
     vector data itself is never shuffled to compute its buckets."""
-    from f1_bigdata_pyspark_spark.operators.similarity import _hyperplane
-    from f1_bigdata_pyspark_spark.functions.vectors import dot
-
     per_band = []
     for band in range(_LSH_DEDUP_BANDS):
         bits = [
@@ -676,22 +609,48 @@ def _emb_with_norm(emb: DataFrame) -> DataFrame:
     per-pair verify does one dot product instead of three array folds.
     Float-identical to functions.vectors.cosine: the denominator is the
     same norm2(a)·norm2(b) product, just computed from a column."""
-    from f1_bigdata_pyspark_spark.functions.vectors import norm2
-
     return emb.select(
         "vec_id", "embedding", norm2(F.col("embedding")).alias("nrm")
     )
 
 
-def _pair_cosine() -> "F.Column":
-    from f1_bigdata_pyspark_spark.functions.vectors import dot
+def _pair_side(en: DataFrame, key: str, side: str, *first) -> DataFrame:
+    """One side of a pair join over ``_emb_with_norm`` rows: ``first``
+    columns, then ``(key, v<side>, n<side>)`` — the names
+    ``_pair_cosine`` reads for sides ``a`` and ``b``."""
+    return en.select(
+        *first,
+        F.col("vec_id").alias(key),
+        F.col("embedding").alias(f"v{side}"),
+        F.col("nrm").alias(f"n{side}"),
+    )
 
+
+def _pair_cosine() -> "F.Column":
+    """Cosine of sides ``a`` and ``b`` rounded to 6 dp (NULL for a zero
+    norm), from the precomputed norms ``na``/``nb``."""
     denom = F.col("na") * F.col("nb")
     return F.round(
         F.when(denom == F.lit(0.0), F.lit(None).cast("double")).otherwise(
             dot(F.col("va"), F.col("vb")) / denom
         ),
         6,
+    )
+
+
+def _pair_scan(emb: DataFrame) -> DataFrame:
+    """``(d1, d2, cos_sim)`` for every pair ``d1 < d2`` of ``emb``'s
+    vectors: the exact quadratic cosine scan, one dot product per pair.
+    The left side is repartitioned by ``d1``: the non-equi self-join plans
+    as a BroadcastNestedLoopJoin over the streamed side's partitions, and
+    the embeddings scan is one split, so without the exchange the whole
+    O(n²) dot fold runs on a single task."""
+    en = _emb_with_norm(emb)
+    par = en.sparkSession.sparkContext.defaultParallelism
+    a = _pair_side(en, "d1", "a").repartition(par, F.col("d1"))
+    b = _pair_side(en, "d2", "b")
+    return a.join(b, F.col("d1") < F.col("d2")).select(
+        "d1", "d2", _pair_cosine().alias("cos_sim")
     )
 
 
@@ -711,7 +670,7 @@ def _pair_cosine() -> "F.Column":
 @query(
     "embedding_lsh_near_dup_pairs",
     oracle=f"""
-WITH {_banded_bucket_sql()}
+WITH {_EMB_SQL}, {_banded_bucket_sql("e")}
 SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2,
        round(list_cosine_similarity(ea.v, eb.v), 6) AS cos_sim
 FROM bands a
@@ -747,19 +706,9 @@ def _lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
         .dropDuplicates()
     )
     en = _emb_with_norm(emb)
-    a = en.select(
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = en.select(
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
     return (
-        pairs.join(a, "d1")
-        .join(b, "d2")
+        pairs.join(_pair_side(en, "d1", "a"), "d1")
+        .join(_pair_side(en, "d2", "b"), "d2")
         .select("d1", "d2", _pair_cosine().alias("cos_sim"))
     )
 
@@ -783,19 +732,7 @@ WITH samp AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
         % 4 = 0
-), x AS (
-  SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS j
-  FROM samp
-), bits AS (
-  SELECT x.vec_id, p.p,
-         CASE WHEN sum(x.val * sin(1000003 * p.p + x.j)) >= 0
-              THEN CAST(1 << (p.p % 3) AS INT) ELSE 0 END AS bit
-  FROM x CROSS JOIN range({_LSH_DEDUP_PLANES}) AS p(p)
-  GROUP BY x.vec_id, p.p
-), bands AS (
-  SELECT vec_id, p // 3 AS band, CAST(sum(bit) AS INT) AS bucket
-  FROM bits GROUP BY vec_id, p // 3
-),
+), {_banded_bucket_sql("samp")},
 exact AS (
   SELECT a.vec_id AS d1, b.vec_id AS d2
   FROM samp a JOIN samp b ON a.vec_id < b.vec_id
@@ -818,28 +755,10 @@ SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_exact_pairs,
 """,
 )
 def embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     samp = emb.filter(md5_long(F.col("vec_id").cast("string")) % 4 == 0)
-    en = _emb_with_norm(samp)
-    a = en.select(
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-        # r11: pin pair-scan parallelism — the non-equi self-join plans as
-        # BroadcastNestedLoopJoin over the STREAMED side's partitions, and
-        # the embeddings scan is one split, so without this exchange the
-        # whole O(n^2) dot-fold ran on a single task (see _all_pairs_dist)
-    ).repartition(en.sparkSession.sparkContext.defaultParallelism, F.col("d1"))
-    b = en.select(
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
     exact = (
-        a.join(b, F.col("d1") < F.col("d2"))
-        .select(_pair_cosine().alias("cos_sim"))
+        _pair_scan(samp)
         .filter(F.col("cos_sim") >= _EMB_DEDUP_THRESHOLD)
         .agg(F.count(F.lit(1)).cast("long").alias("n_exact_pairs"))
     )
@@ -886,27 +805,9 @@ _V2_BUDGET = 50
 @query(
     "corpus_curation_v2",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, source, w[i] AS t, w[i+1] AS t2
-  FROM (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-       (SELECT unnest(range(1, 1000)) AS i)
-  WHERE i <= len(w)
-),
-lm_pairs AS (SELECT doc_id, source, t, t2 FROM toks WHERE t2 IS NOT NULL),
-uni AS (SELECT t, count(*) AS c1 FROM toks GROUP BY t),
-vocab AS (SELECT count(DISTINCT t) AS v FROM toks),
-big AS (SELECT t, t2, count(*) AS c2 FROM lm_pairs GROUP BY t, t2),
-scores AS (
-  SELECT b.t, b.t2,
-         ln((b.c2 + 1.0) / (u.c1 + (SELECT v FROM vocab))) AS lnp
-  FROM big b JOIN uni u ON b.t = u.t
-),
-per_doc AS (
-  SELECT p.doc_id, p.source,
-         round(-sum(s.lnp) / count(*), 6) AS xent
-  FROM lm_pairs p JOIN scores s ON p.t = s.t AND p.t2 = s.t2
-  GROUP BY p.doc_id, p.source
-),
+WITH {_BIGRAM_SQL},
+{_ADD1_SCORES_SQL},
+{_PER_DOC_XENT_SQL},
 cut AS (SELECT round(quantile_cont(xent, 0.9), 6) AS p90 FROM per_doc),
 gated AS (
   SELECT d.doc_id, d.source, d.text, d.n_chars
@@ -937,40 +838,7 @@ deduped AS (
   LEFT JOIN dupstat d ON g.doc_id = d.doc_id
   WHERE coalesce(2 * d.c_later > d.n_fp, FALSE) = FALSE
 ),
-per_src AS (
-  SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-           AS n_tokens
-  FROM deduped GROUP BY source
-),
-wts AS (
-  SELECT source, pow(n_tokens, 0.7) AS w,
-         sum(pow(n_tokens, 0.7)) OVER () AS wsum
-  FROM per_src
-),
-shares AS (
-  SELECT source, round({_V2_BUDGET} * w / wsum, 9) AS share FROM wts
-),
-quota AS (
-  SELECT source,
-         CAST(floor(share) + CASE WHEN row_number() OVER (
-                  ORDER BY share - floor(share) DESC, source)
-              <= {_V2_BUDGET} - sum(CAST(floor(share) AS BIGINT)) OVER ()
-              THEN 1 ELSE 0 END AS BIGINT) AS alloc
-  FROM shares
-),
-ranked AS (
-  SELECT doc_id, source, n_chars,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT), doc_id) AS rn
-  FROM deduped
-),
-drawn AS (
-  SELECT r.source, r.n_chars
-  FROM ranked r JOIN quota q ON r.source = q.source
-  WHERE r.rn <= q.alloc
-),
+{_quota_draw_sql("deduped", _V2_BUDGET)},
 funnel AS (
   SELECT g.source,
          count(*) AS n_after_gate,
@@ -992,42 +860,13 @@ ORDER BY f.source
 """,
 )
 def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from f1_bigdata_pyspark_spark.operators.dedup import raw_shingle_hashes
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-    from f1_bigdata_pyspark_spark.queries.text_pipeline import (
-        _temperature_allocation,
-    )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
 
     # 1. LM cross-entropy gate at the corpus p90 (same math as
     # ngram_lm_perplexity, relative threshold)
-    tok = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = tok.select(
-        "doc_id", "t", F.lead("t").over(w).alias("t2")
-    ).filter(F.col("t2").isNotNull())
-    uni = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = tok.select("t").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("v")
-    )
-    big = pairs.groupBy("t", "t2").agg(F.count(F.lit(1)).alias("c2"))
-    lnp = F.log((F.col("c2") + 1.0) / (F.col("c1") + F.col("v")))
-    scores = (
-        big.join(uni, "t")
-        .crossJoin(F.broadcast(vocab))
-        .select("t", "t2", lnp.alias("lnp"))
-    )
+    tok, pairs = _bigram_frames(docs, "doc_id")
     per_doc = (
-        pairs.join(scores, ["t", "t2"])
+        pairs.join(_add1_bigram_scores(tok, pairs), ["t", "t2"])
         .groupBy("doc_id")
         .agg(F.round(-F.sum("lnp") / F.count(F.lit(1)), 6).alias("xent"))
     )
@@ -1061,24 +900,7 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = materialize(gated.join(drop, "doc_id", "left_anti"))
 
     # 3. temperature quota draw (budget 50) over the deduped corpus
-    quota = _temperature_allocation(deduped, _V2_BUDGET).select(
-        "source", F.col("alloc_docs").alias("quota")
-    )
-    wr = Window.partitionBy("source").orderBy(
-        md5_long(F.col("doc_id").cast("string")), "doc_id"
-    )
-    drawn = (
-        deduped.select(
-            "source", "n_chars", F.row_number().over(wr).alias("rn")
-        )
-        .join(broadcast_if_small(quota), "source")
-        .filter(F.col("rn") <= F.col("quota"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_drawn"),
-            F.sum("n_chars").cast("long").alias("drawn_chars"),
-        )
-    )
+    quota, drawn = _quota_draw(deduped, _V2_BUDGET)
     funnel = gated.join(
         deduped.select("doc_id").withColumn("kept", F.lit(1)), "doc_id", "left"
     ).groupBy("source").agg(
@@ -1095,12 +917,7 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_after_gate",
             "n_after_dedup",
             "quota",
-            F.coalesce(F.col("n_drawn"), F.lit(0))
-            .cast("long")
-            .alias("n_drawn"),
-            F.coalesce(F.col("drawn_chars"), F.lit(0))
-            .cast("long")
-            .alias("drawn_chars"),
+            *_drawn_or_zero(),
         )
         .orderBy("source")
     )
@@ -1125,10 +942,8 @@ def corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "semantic_dedup_keep",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), c AS (
+    oracle=f"""
+WITH {_EMB_SQL}, c AS (
   SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16
 ), scored AS (
   SELECT e.vec_id, c.cid,
@@ -1147,17 +962,7 @@ WITH e AS (
   JOIN e ea ON ea.vec_id = a.vec_id
   JOIN e eb ON eb.vec_id = b.vec_id
   WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= 0.35
-), und AS (
-  SELECT d1 AS a, d2 AS b FROM edges UNION SELECT d2, d1 FROM edges
-), reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM und
-    UNION
-    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
-  ) SELECT * FROM r
-), labels AS (
-  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
-), dropped AS (
+), {_COMPONENTS_SQL}, dropped AS (
   SELECT node FROM labels WHERE node > comp
 )
 SELECT cell.cid AS centroid_id,
@@ -1171,10 +976,6 @@ ORDER BY centroid_id
 """,
 )
 def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.graph import connected_components
-    from f1_bigdata_pyspark_spark.operators.similarity import ivf_assign
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"),
@@ -1183,19 +984,10 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = materialize(
         ivf_assign(emb, centroids).select("vec_id", "centroid_id")
     )
-    en = _emb_with_norm(emb)
-    a = cells.join(en, "vec_id").select(
-        F.col("centroid_id").alias("cid"),
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = cells.join(en, "vec_id").select(
-        F.col("centroid_id").alias("cid"),
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
+    celled = cells.join(_emb_with_norm(emb), "vec_id")
+    cid = F.col("centroid_id").alias("cid")
+    a = _pair_side(celled, "d1", "a", cid)
+    b = _pair_side(celled, "d2", "b", cid)
     scored = materialize(
         a.join(b, "cid")
         .filter(F.col("d1") < F.col("d2"))
@@ -1308,10 +1100,6 @@ ORDER BY d1, d2
 """,
 )
 def setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     ts = materialize(
@@ -1381,35 +1169,8 @@ def setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "cluster_canonical_docs",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc_id = d1
-  JOIN cnt cb ON cb.doc_id = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-), und AS (
-  SELECT d1 AS a, d2 AS b FROM edges
-  UNION SELECT d2, d1 FROM edges
-), reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM und
-    UNION
-    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
-  ) SELECT * FROM r
-), labels AS (
-  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
-), ranked AS (
+    oracle=f"""
+WITH {_NEAR_DUP_LABELS_SQL}, ranked AS (
   SELECT l.comp, l.node, d.n_chars,
          row_number() OVER (PARTITION BY l.comp
                             ORDER BY d.n_chars DESC, l.node ASC) AS rnk
@@ -1426,19 +1187,11 @@ ORDER BY cluster_id
 """,
 )
 def cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.operators.graph import connected_components
-
     docs = load_table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2).select(
         "d1", "d2"
     )
     labels = connected_components(edges)
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-
     clustered = labels.join(
         broadcast_if_small(
             docs.select(F.col("doc_id").alias("node"), "n_chars")
@@ -1481,27 +1234,11 @@ def cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "cross_source_dup_matrix",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc_id = d1
-  JOIN cnt cb ON cb.doc_id = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-), cells AS (
+    oracle=f"""
+WITH {_shingle_sql()}, {_jaccard_edges_sql(0.2)}, cells AS (
   SELECT least(sa.source, sb.source) AS src_a,
          greatest(sa.source, sb.source) AS src_b
-  FROM pairs
+  FROM edges
   JOIN documents sa ON sa.doc_id = d1
   JOIN documents sb ON sb.doc_id = d2
 )
@@ -1512,10 +1249,6 @@ ORDER BY n_dup_pairs DESC, src_a, src_b
 """,
 )
 def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2).select(
         "d1", "d2"
@@ -1551,10 +1284,8 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "near_dup_threshold_sweep",
-    oracle="""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
+    oracle=f"""
+WITH {_EMB_SQL},
 pairs AS (
   SELECT a.vec_id AS d1, b.vec_id AS d2,
          round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
@@ -1582,29 +1313,8 @@ ORDER BY h.threshold
 """,
 )
 def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = _emb_with_norm(emb)
-    a = en.select(
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-        # r11: pin pair-scan parallelism — the non-equi self-join plans as
-        # BroadcastNestedLoopJoin over the STREAMED side's partitions, and
-        # the embeddings scan is one split, so without this exchange the
-        # whole O(n^2) dot-fold ran on a single task (see _all_pairs_dist)
-    ).repartition(en.sparkSession.sparkContext.defaultParallelism, F.col("d1"))
-    b = en.select(
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    pairs = materialize(
-        a.join(b, F.col("d1") < F.col("d2"))
-        .select("d1", "d2", _pair_cosine().alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.45)
-    )
+    pairs = materialize(_pair_scan(emb).filter(F.col("cos_sim") >= 0.45))
     th = F.array(*[F.lit(t) for t in (0.45, 0.55, 0.65, 0.75)])
     hits = pairs.select(
         "d1", "d2", F.explode(th).alias("threshold"), "cos_sim"
@@ -1720,13 +1430,8 @@ def dedup_survivor_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "shingle_containment_pairs",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
+    oracle=f"""
+WITH {_shingle_sql()}, cnt AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
 ), inter AS (
   SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(count(*) AS BIGINT) AS c
@@ -1743,12 +1448,6 @@ ORDER BY contained_doc, container_doc
 """,
 )
 def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.dedup import shingle_table
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     sh = materialize(shingle_table(docs, "doc_id", "text", 3))
     counts = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -1789,27 +1488,10 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "dup_quality_interaction",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), dup_ids AS (
+    oracle=f"""
+WITH {_shingle_sql()}, {_jaccard_edges_sql(0.2)}, dup_ids AS (
   SELECT DISTINCT node FROM (
-    SELECT d1 AS node FROM inter
-    JOIN cnt ca ON ca.doc_id = d1 JOIN cnt cb ON cb.doc_id = d2
-    WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-    UNION ALL
-    SELECT d2 FROM inter
-    JOIN cnt ca ON ca.doc_id = d1 JOIN cnt cb ON cb.doc_id = d2
-    WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
+    SELECT d1 AS node FROM edges UNION ALL SELECT d2 FROM edges
   )
 ), q AS (
   SELECT doc_id,
@@ -1829,10 +1511,6 @@ ORDER BY is_near_dup
 """,
 )
 def dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2)
     dup_ids = (
@@ -1841,12 +1519,7 @@ def dup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_dup", F.lit(True))
     )
     toks = F.split(F.col("text"), " ")
-    n_stop = F.size(
-        F.filter(
-            toks,
-            lambda t: t.isin("the", "a", "an", "of", "to", "and", "in", "is"),
-        )
-    )
+    n_stop = _n_stopwords(toks)
     q = docs.filter(F.size(toks) > 0).select(
         "doc_id",
         F.round(n_stop * 1000.0 / F.size(toks)).cast("long").alias("q_pm"),
@@ -1937,12 +1610,6 @@ ORDER BY doc_id
 """,
 )
 def passage_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import tokens
-    from f1_bigdata_pyspark_spark.operators.dedup import (
-        positioned_shingle_hashes,
-    )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     par = spark.sparkContext.defaultParallelism
     # one doc-keyed exchange feeds BOTH the fingerprint windows and the

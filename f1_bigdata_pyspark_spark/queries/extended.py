@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from f1_bigdata_pyspark_spark.catalog import load_table
+from f1_bigdata_pyspark_spark.queries.dedup_pipeline import _NEAR_DUP_LABELS_SQL
 from f1_bigdata_pyspark_spark.queries.registry import query
 from f1_bigdata_pyspark_spark.operators.join_policy import broadcast_if_small
 
@@ -927,33 +928,8 @@ def sql_udf_dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "recursive_cte_components",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-  FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-), cnt AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT d1, d2 FROM inter
-  JOIN cnt ca ON ca.doc_id = d1 JOIN cnt cb ON cb.doc_id = d2
-  WHERE c * 1.0 / (ca.n + cb.n - c) >= 0.2
-), und AS (
-  SELECT d1 AS a, d2 AS b FROM edges UNION SELECT d2, d1 FROM edges
-), reach AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM und
-    UNION
-    SELECT r.a, u.b FROM r JOIN und u ON r.b = u.a
-  ) SELECT * FROM r
-), labels AS (
-  SELECT a AS node, least(a, min(b)) AS comp FROM reach GROUP BY a
-)
+    oracle=f"""
+WITH {_NEAR_DUP_LABELS_SQL}
 SELECT comp, CAST(count(*) AS BIGINT) AS n_nodes
 FROM labels
 GROUP BY comp

@@ -154,6 +154,9 @@ def asof_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (s.start < w.end AND w.start < s.end). The window table broadcasts, so
 # the non-equi join never shuffles the session side — the same physical
 # shape as value_tier_range_join, but on time intervals.
+# NULL users are not counted: events with a NULL user_id form sessions of
+# their own, which count in n_sessions, but n_users counts distinct
+# non-NULL ids (countDistinct here, count(DISTINCT ...) in the oracle).
 # --------------------------------------------------------------------------
 _MAINT_WINDOWS = [
     ("W1", "2024-01-05 00:00:00", "2024-01-07 00:00:00"),

@@ -25,6 +25,12 @@ from f1_bigdata_pyspark_spark.operators.similarity import (
     lsh_topk,
     similarity_threshold,
 )
+from f1_bigdata_pyspark_spark.queries.dedup_pipeline import (
+    _emb_with_norm,
+    _pair_cosine,
+    _pair_scan,
+    _pair_side,
+)
 from f1_bigdata_pyspark_spark.queries.registry import query
 from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
@@ -1377,31 +1383,8 @@ ORDER BY bin
 def cosine_distribution_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from f1_bigdata_pyspark_spark.queries.dedup_pipeline import (
-        _emb_with_norm,
-        _pair_cosine,
-    )
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = _emb_with_norm(emb)
-    a = en.select(
-        F.col("vec_id").alias("d1"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-        # r11: pin pair-scan parallelism — the non-equi self-join plans as
-        # BroadcastNestedLoopJoin over the STREAMED side's partitions, and
-        # the embeddings scan is one split, so without this exchange the
-        # whole O(n^2) dot-fold ran on a single task (see _all_pairs_dist)
-    ).repartition(en.sparkSession.sparkContext.defaultParallelism, F.col("d1"))
-    b = en.select(
-        F.col("vec_id").alias("d2"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    pairs = materialize(
-        a.join(b, F.col("d1") < F.col("d2")).select(
-            _pair_cosine().alias("cos_r")
-        )
-    )
+    pairs = materialize(_pair_scan(emb).select(F.col("cos_sim").alias("cos_r")))
     bin_col = F.least(
         F.greatest(
             F.floor((F.col("cos_r") + 1.0) / 0.1).cast("long"), F.lit(0)
@@ -1427,10 +1410,10 @@ def _all_pairs_dist(emb: DataFrame) -> DataFrame:
     hubness diagnostics.
 
     r11 shape (measured 49 s → ~2 s for hubness at sf0.01):
-    - norms are precomputed ONCE per vector, so each pair costs one dot
+    - norms are precomputed ONCE per vector (dedup_pipeline's
+      ``_emb_with_norm``/``_pair_cosine``), so each pair costs one dot
       fold instead of three interpreted array folds — float-identical to
-      ``functions.vectors.cosine`` (same norm2(a)·norm2(b) denominator),
-      the same discipline as dedup_pipeline._pair_cosine;
+      ``functions.vectors.cosine`` (same norm2(a)·norm2(b) denominator);
     - the src side is EXPLICITLY repartitioned by src before the
       non-equi self-join: the join plans as BroadcastNestedLoopJoin over
       the streamed side's partitions, and the embeddings file is ONE
@@ -1439,27 +1422,11 @@ def _all_pairs_dist(emb: DataFrame) -> DataFrame:
       downstream per-src window with no further exchange;
     - no localCheckpoint: each face consumes the pairs exactly once (the
       old materialize wrote the full n² frame to disk first)."""
-    from f1_bigdata_pyspark_spark.functions.vectors import dot, norm2
-
     par = emb.sparkSession.sparkContext.defaultParallelism
-    en = emb.select(
-        "vec_id", "embedding", norm2(F.col("embedding")).alias("nrm")
-    )
-    a = en.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    ).repartition(par, F.col("src"))
-    b = en.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    denom = F.col("na") * F.col("nb")
-    cos = F.when(denom == F.lit(0.0), F.lit(None).cast("double")).otherwise(
-        dot(F.col("va"), F.col("vb")) / denom
-    )
-    dist = F.lit(1.0) - F.round(cos, 6)
+    en = _emb_with_norm(emb)
+    a = _pair_side(en, "src", "a").repartition(par, F.col("src"))
+    b = _pair_side(en, "dst", "b")
+    dist = F.lit(1.0) - _pair_cosine()
     return a.join(b, F.col("src") != F.col("dst")).select(
         "src", "dst", dist.alias("dist")
     )

@@ -7,8 +7,9 @@ a 100 TB corpus pass stays in whole-stage codegen with one aggregate shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import udtf
 
 from f1_bigdata_pyspark_spark.catalog import load_table
 from f1_bigdata_pyspark_spark.functions.text import (
@@ -16,15 +17,29 @@ from f1_bigdata_pyspark_spark.functions.text import (
     STOPWORDS,
     fingerprint,
     lang_score,
+    md5_long,
     quality_features,
     token_count,
+    tokens,
 )
-from f1_bigdata_pyspark_spark.queries.registry import query
+from f1_bigdata_pyspark_spark.operators.bpe import bpe_apply, bpe_merge_table
+from f1_bigdata_pyspark_spark.operators.dedup import (
+    _raw_shingles,
+    raw_shingle_hashes,
+)
 from f1_bigdata_pyspark_spark.operators.join_policy import broadcast_if_small
+from f1_bigdata_pyspark_spark.queries.registry import query
+from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
+from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
 
 
 def _sql_list(words) -> str:
     return ", ".join(f"'{w}'" for w in words)
+
+
+def _n_stopwords(toks: Column) -> Column:
+    """How many of the array ``toks``' entries are ``STOPWORDS``."""
+    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
 
 
 # --------------------------------------------------------------------------
@@ -274,8 +289,6 @@ ORDER BY source
 """,
 )
 def rolling_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long, tokens
-
     docs = load_table(spark, sf_dir, "documents")
     # Spark's aggregate starts at 0: (0·131 + x0) mod P == x0, identical to
     # DuckDB's list_reduce seeding with the first transformed element.
@@ -324,8 +337,6 @@ ORDER BY source, split
 """,
 )
 def train_test_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
     bucket = md5_long(F.col("doc_id").cast("string")) % 100
     split = (
@@ -381,8 +392,6 @@ ORDER BY source
 """,
 )
 def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
     bucket = md5_long(F.col("doc_id").cast("string")) % 10000
     tier_a = F.col("source").isin(*[f"src{i}" for i in range(5)])
@@ -478,8 +487,6 @@ ORDER BY doc_id, draw
 """,
 )
 def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
     ids = docs.select("doc_id")
     span = ids.agg(F.max("doc_id").alias("mx"))
@@ -547,8 +554,6 @@ ORDER BY doc_id, chunk_idx
 """,
 )
 def udtf_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import udtf
-
     # useArrow: without it a Python UDTF plans as BatchEvalPythonUDTF —
     # the pickled row-at-a-time path; Arrow keeps it batch-evaluated like
     # every other Python face here (audited registry-wide in
@@ -605,9 +610,6 @@ ORDER BY rank
 """,
 )
 def bottomk_sample_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from pyspark.sql import Window
-
     events = load_table(spark, sf_dir, "events")
     prio = events.select(
         "event_id",
@@ -736,9 +738,6 @@ ORDER BY source
 """,
 )
 def split_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from f1_bigdata_pyspark_spark.operators.dedup import raw_shingle_hashes
-
     docs = load_table(spark, sf_dir, "documents")
     split = F.when(
         md5_long(F.col("doc_id").cast("string")) % 100 < 80, "train"
@@ -818,8 +817,6 @@ LIMIT 15
 """,
 )
 def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t")
@@ -906,8 +903,6 @@ ORDER BY pack_id
 """,
 )
 def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.size(F.split(F.col("text"), " ")).alias("n"))
     chunks = t.select(
@@ -979,8 +974,6 @@ ORDER BY source
 """,
 )
 def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.dedup import _raw_shingles
-
     docs = load_table(spark, sf_dir, "documents")
     big = _raw_shingles(docs, "doc_id", "text", 2)  # non-distinct bigrams
     per = big.groupBy("doc").agg(
@@ -1052,8 +1045,6 @@ ORDER BY source
 """,
 )
 def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     chars = docs.select(
         "doc_id", "source", F.explode(F.split("text", "")).alias("ch")
@@ -1130,8 +1121,6 @@ ORDER BY source
 """,
 )
 def chunking_with_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import token_count
-
     W, S = 64, 48
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -1216,8 +1205,6 @@ ORDER BY source
 """,
 )
 def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
     # u ∈ (0,1): (h+1) / (2^60 + 1) with h ∈ [0, 2^60)
     u = (md5_long(F.col("doc_id").cast("string")) + 1) / F.lit(
@@ -1241,6 +1228,100 @@ def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The bigram-LM building blocks shared by ngram_lm_perplexity,
+# kneser_ney_lm_scores and dedup_pipeline.corpus_curation_v2.
+#
+# ``toks``/``pairs``: every token (doc_id, source, t, t2) with its in-doc
+# successor, and the bigrams among them (t2 not null).
+_BIGRAM_SQL = """toks AS (
+  SELECT doc_id, source, w[i] AS t, w[i+1] AS t2
+  FROM (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
+       (SELECT unnest(range(1, (SELECT max(len(string_split(text, ' '))) FROM documents) + 1)) AS i)
+  WHERE i <= len(w)
+),
+pairs AS (SELECT doc_id, source, t, t2 FROM toks WHERE t2 IS NOT NULL)"""
+
+# ``uni``/``vocab``/``big``/``scores``: add-1-smoothed bigram
+# log-probabilities (t, t2, lnp)
+_ADD1_SCORES_SQL = """uni AS (SELECT t, count(*) AS c1 FROM toks GROUP BY t),
+vocab AS (SELECT count(DISTINCT t) AS v FROM toks),
+big AS (SELECT t, t2, count(*) AS c2 FROM pairs GROUP BY t, t2),
+scores AS (
+  SELECT b.t, b.t2,
+         ln((b.c2 + 1.0) / (u.c1 + (SELECT v FROM vocab))) AS lnp
+  FROM big b JOIN uni u ON b.t = u.t
+)"""
+
+# ``per_doc``: each document's cross-entropy under ``scores``
+_PER_DOC_XENT_SQL = """per_doc AS (
+  SELECT p.doc_id, p.source,
+         round(-sum(s.lnp) / count(*), 6) AS xent
+  FROM pairs p JOIN scores s ON p.t = s.t AND p.t2 = s.t2
+  GROUP BY p.doc_id, p.source
+)"""
+
+# the per-source rollup of ``per_doc``
+_XENT_ROLLUP_SQL = """SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       round(avg(xent), 4) AS avg_xent,
+       round(min(xent), 6) AS min_xent,
+       round(max(xent), 6) AS max_xent,
+       round(median(xent), 6) AS median_xent
+FROM per_doc
+GROUP BY source
+ORDER BY source"""
+
+
+def _bigram_frames(docs: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """``(tok, pairs)``: every token ``(*cols, pos, t)`` of ``docs`` and
+    its in-doc bigrams ``(*cols, t, t2)``; ``cols`` starts with doc_id."""
+    tok = docs.select(
+        *cols, F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t")
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    pairs = tok.select(*cols, "t", F.lead("t").over(w).alias("t2")).filter(
+        F.col("t2").isNotNull()
+    )
+    return tok, pairs
+
+
+def _add1_bigram_scores(tok: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``(t, t2, lnp)``: the add-1-smoothed bigram log-probability
+    ln((C(w1,w2)+1)/(C(w1)+V)) of every bigram in ``pairs``. Unigram
+    counts run over ALL token instances (doc-final tokens included): the
+    LM denominator is the unigram count, not the pair-head count."""
+    uni = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c1"))
+    vocab = tok.select("t").distinct().agg(
+        F.count(F.lit(1)).cast("long").alias("v")
+    )
+    big = pairs.groupBy("t", "t2").agg(F.count(F.lit(1)).alias("c2"))
+    lnp = F.log((F.col("c2") + 1.0) / (F.col("c1") + F.col("v")))
+    return (
+        big.join(uni, "t")
+        .crossJoin(F.broadcast(vocab))
+        .select("t", "t2", lnp.alias("lnp"))
+    )
+
+
+def _xent_by_source(scored: DataFrame) -> DataFrame:
+    """Per-source rollup of per-doc cross-entropy over ``scored`` bigram
+    instances ``(doc_id, source, lnp)``."""
+    per_doc = scored.groupBy("doc_id", "source").agg(
+        F.round(-F.sum("lnp") / F.count(F.lit(1)), 6).alias("xent")
+    )
+    return (
+        per_doc.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.round(F.avg("xent"), 4).alias("avg_xent"),
+            F.round(F.min("xent"), 6).alias("min_xent"),
+            F.round(F.max("xent"), 6).alias("max_xent"),
+            F.round(F.median("xent"), 6).alias("median_xent"),
+        )
+        .orderBy("source")
+    )
+
+
 # --------------------------------------------------------------------------
 # Q: ngram_lm_perplexity — corpus-LM quality scoring (the CCNet/Gopher
 # filter family): train an add-1-smoothed bigram language model ON the
@@ -1259,82 +1340,18 @@ def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "ngram_lm_perplexity",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, source, w[i] AS t, w[i+1] AS t2
-  FROM (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-       (SELECT unnest(range(1, (SELECT max(len(string_split(text, ' '))) FROM documents) + 1)) AS i)
-  WHERE i <= len(w)
-),
-pairs AS (SELECT doc_id, source, t, t2 FROM toks WHERE t2 IS NOT NULL),
-uni AS (SELECT t, count(*) AS c1 FROM toks GROUP BY t),
-vocab AS (SELECT count(DISTINCT t) AS v FROM toks),
-big AS (SELECT t, t2, count(*) AS c2 FROM pairs GROUP BY t, t2),
-scores AS (
-  SELECT b.t, b.t2,
-         ln((b.c2 + 1.0) / (u.c1 + (SELECT v FROM vocab))) AS lnp
-  FROM big b JOIN uni u ON b.t = u.t
-),
-per_doc AS (
-  SELECT p.doc_id, p.source,
-         round(-sum(s.lnp) / count(*), 6) AS xent
-  FROM pairs p JOIN scores s ON p.t = s.t AND p.t2 = s.t2
-  GROUP BY p.doc_id, p.source
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       round(avg(xent), 4) AS avg_xent,
-       round(min(xent), 6) AS min_xent,
-       round(max(xent), 6) AS max_xent,
-       round(median(xent), 6) AS median_xent
-FROM per_doc
-GROUP BY source
-ORDER BY source
+    oracle=f"""
+WITH {_BIGRAM_SQL},
+{_ADD1_SCORES_SQL},
+{_PER_DOC_XENT_SQL}
+{_XENT_ROLLUP_SQL}
 """,
 )
 def ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = tok.select(
-        "doc_id", "source", "t", F.lead("t").over(w).alias("t2")
-    ).filter(F.col("t2").isNotNull())
-    # unigram counts over ALL token instances (doc-final tokens included) —
-    # the LM denominator is the unigram count, not the pair-head count
-    uni = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = tok.select("t").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("v")
-    )
-    big = pairs.groupBy("t", "t2").agg(F.count(F.lit(1)).alias("c2"))
-    lnp = F.log((F.col("c2") + 1.0) / (F.col("c1") + F.col("v")))
-    scores = (
-        big.join(uni, "t")
-        .crossJoin(F.broadcast(vocab))
-        .select("t", "t2", lnp.alias("lnp"))
-    )
-    per_doc = (
-        pairs.join(scores, ["t", "t2"])
-        .groupBy("doc_id", "source")
-        .agg(
-            F.round(-F.sum("lnp") / F.count(F.lit(1)), 6).alias("xent")
-        )
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("xent"), 4).alias("avg_xent"),
-            F.round(F.min("xent"), 6).alias("min_xent"),
-            F.round(F.max("xent"), 6).alias("max_xent"),
-            F.round(F.median("xent"), 6).alias("median_xent"),
-        )
-        .orderBy("source")
+    tok, pairs = _bigram_frames(docs, "doc_id", "source")
+    return _xent_by_source(
+        pairs.join(_add1_bigram_scores(tok, pairs), ["t", "t2"])
     )
 
 
@@ -1404,9 +1421,7 @@ def _temperature_allocation(docs: DataFrame, budget: int) -> DataFrame:
     """(source, n_docs, n_tokens, weight, alloc_docs) with
     sum(alloc_docs) == budget exactly (largest-remainder apportionment of
     weights ∝ n_tokens^α). Shared by the allocation face and the
-    quota-draw face."""
-    from pyspark.sql import Window
-
+    quota-draw faces."""
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col("text"), " ")))
@@ -1453,6 +1468,80 @@ def _temperature_allocation(docs: DataFrame, budget: int) -> DataFrame:
         .cast("long")
         .alias("alloc_docs"),
     )
+
+
+def _quota_draw(docs: DataFrame, budget: int) -> tuple[DataFrame, DataFrame]:
+    """``(quota, drawn)``: each source's temperature quota ``(source,
+    quota)`` of a ``budget``-document draw from ``docs``, and the draw
+    ``(source, n_drawn, drawn_chars)`` — the source's ``quota`` documents
+    with the smallest md5(doc_id) hashes (doc_id tiebreak). Sources that
+    draw nothing have no ``drawn`` row."""
+    quota = _temperature_allocation(docs, budget).select(
+        "source", F.col("alloc_docs").alias("quota")
+    )
+    w = Window.partitionBy("source").orderBy(
+        md5_long(F.col("doc_id").cast("string")), "doc_id"
+    )
+    drawn = (
+        docs.select("source", "n_chars", F.row_number().over(w).alias("rn"))
+        .join(broadcast_if_small(quota), "source")
+        .filter(F.col("rn") <= F.col("quota"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_drawn"),
+            F.sum("n_chars").cast("long").alias("drawn_chars"),
+        )
+    )
+    return quota, drawn
+
+
+def _drawn_or_zero() -> list[Column]:
+    """``n_drawn``/``drawn_chars`` of ``_quota_draw``'s ``drawn`` after a
+    left join: 0 for a source that drew nothing."""
+    return [
+        F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+        for c in ("n_drawn", "drawn_chars")
+    ]
+
+
+def _quota_draw_sql(src: str, budget: int) -> str:
+    """The DuckDB twin of ``_quota_draw`` over CTE or table ``src``:
+    ``quota`` (source, alloc) and ``drawn`` (source, n_chars) among the
+    CTEs ``per_src``/``wts``/``shares``/``quota``/``ranked``/``drawn``."""
+    return f"""per_src AS (
+  SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+           AS n_tokens
+  FROM {src} GROUP BY source
+),
+wts AS (
+  SELECT source, pow(n_tokens, {_MIX_ALPHA}) AS w,
+         sum(pow(n_tokens, {_MIX_ALPHA})) OVER () AS wsum
+  FROM per_src
+),
+shares AS (
+  SELECT source, round({budget} * w / wsum, 9) AS share FROM wts
+),
+quota AS (
+  SELECT source,
+         CAST(floor(share) + CASE WHEN row_number() OVER (
+                  ORDER BY share - floor(share) DESC, source)
+              <= {budget} - sum(CAST(floor(share) AS BIGINT)) OVER ()
+              THEN 1 ELSE 0 END AS BIGINT) AS alloc
+  FROM shares
+),
+ranked AS (
+  SELECT doc_id, source, n_chars,
+         row_number() OVER (
+           PARTITION BY source
+           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+                    AS BIGINT), doc_id) AS rn
+  FROM {src}
+),
+drawn AS (
+  SELECT r.source, r.n_chars
+  FROM ranked r JOIN quota q ON r.source = q.source
+  WHERE r.rn <= q.alloc
+)"""
 
 
 # --------------------------------------------------------------------------
@@ -1539,90 +1628,25 @@ _DRAW_BUDGET = 100
 @query(
     "stratified_quota_sample",
     oracle=f"""
-WITH per_src AS (
-  SELECT source, count(*) AS n_docs,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-),
-wts AS (
-  SELECT source, n_docs, pow(n_tokens, {_MIX_ALPHA}) AS w,
-         sum(pow(n_tokens, {_MIX_ALPHA})) OVER () AS wsum
-  FROM per_src
-),
-shares AS (
-  SELECT source, n_docs,
-         round({_DRAW_BUDGET} * w / wsum, 9) AS share
-  FROM wts
-),
-quota AS (
-  SELECT source, n_docs,
-         CAST(floor(share) + CASE WHEN row_number() OVER (
-                  ORDER BY share - floor(share) DESC, source)
-              <= {_DRAW_BUDGET} - sum(CAST(floor(share) AS BIGINT)) OVER ()
-              THEN 1 ELSE 0 END AS BIGINT) AS alloc_docs
-  FROM shares
-),
-ranked AS (
-  SELECT doc_id, source, n_chars,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT), doc_id) AS rn
-  FROM documents
-),
-drawn AS (
-  SELECT r.source, r.n_chars
-  FROM ranked r JOIN quota q ON r.source = q.source
-  WHERE r.rn <= q.alloc_docs
-)
+WITH {_quota_draw_sql("documents", _DRAW_BUDGET)}
 SELECT q.source,
-       q.alloc_docs AS quota,
+       q.alloc AS quota,
        CAST(count(d.n_chars) AS BIGINT) AS n_drawn,
        CAST(coalesce(sum(d.n_chars), 0) AS BIGINT) AS drawn_chars
 FROM quota q LEFT JOIN drawn d ON q.source = d.source
-GROUP BY q.source, q.alloc_docs
+GROUP BY q.source, q.alloc
 ORDER BY q.source
 """,
 )
 def stratified_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from f1_bigdata_pyspark_spark.operators.join_policy import (
-        broadcast_if_small,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    quota = _temperature_allocation(docs, _DRAW_BUDGET).select(
-        "source", F.col("alloc_docs").alias("quota")
-    )
-    w = Window.partitionBy("source").orderBy(
-        md5_long(F.col("doc_id").cast("string")), "doc_id"
-    )
-    ranked = docs.select(
-        "source", "n_chars", F.row_number().over(w).alias("rn")
-    )
-    drawn = ranked.join(broadcast_if_small(quota), "source").filter(
-        F.col("rn") <= F.col("quota")
-    )
+    quota, drawn = _quota_draw(docs, _DRAW_BUDGET)
     return (
-        quota.join(
-            drawn.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_drawn"),
-                F.sum("n_chars").cast("long").alias("drawn_chars"),
-            ),
-            "source",
-            "left",
-        )
+        quota.join(drawn, "source", "left")
         .select(
             "source",
             "quota",
-            F.coalesce(F.col("n_drawn"), F.lit(0))
-            .cast("long")
-            .alias("n_drawn"),
-            F.coalesce(F.col("drawn_chars"), F.lit(0))
-            .cast("long")
-            .alias("drawn_chars"),
+            *_drawn_or_zero(),
         )
         .orderBy("source")
     )
@@ -1834,8 +1858,6 @@ def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     st = materialize(st)  # three readers below; tokenize the corpus once
     src_tot = st.groupBy("source").agg(F.sum("c").alias("t_s"))
     gt = st.groupBy("tok").agg(F.sum("c").alias("g"))
@@ -1868,7 +1890,12 @@ def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: after the one corpus-sized groupBy(word), every round is
 # vocab-sized (Zipf) — the plan a trainer runs at 100 TB.
 # --------------------------------------------------------------------------
-def _bpe_oracle(rounds: int = 4) -> str:
+def _bpe_ctes(rounds: int, final_state: bool) -> list[str]:
+    """The unrolled BPE merge rounds as MATERIALIZED DuckDB CTEs: ``w0``
+    (the word vocabulary), then per round ``r`` the symbol pairs ``p{r}``
+    and the winning merge ``t{r}``, and — for every round but the last,
+    or for the last too when ``final_state`` — the merge marks ``m{r}``
+    and the merged state ``w{r}``."""
     parts = [
         """w0 AS MATERIALIZED (
   SELECT wid, count(*) AS freq, string_split(wid, '') AS syms FROM (
@@ -1889,7 +1916,7 @@ def _bpe_oracle(rounds: int = 4) -> str:
   FROM p{r} WHERE s2 IS NOT NULL GROUP BY s, s2
   ORDER BY cnt DESC, a, b LIMIT 1
 )""")
-        if r < rounds:
+        if r < rounds or final_state:
             parts.append(f"""m{r} AS MATERIALIZED (
   SELECT wid, freq, i, s, match AND (mrank % 2 = 1) AS merge FROM (
     SELECT wid, freq, i, s, match,
@@ -1918,6 +1945,11 @@ def _bpe_oracle(rounds: int = 4) -> str:
     FROM m{r}
   ) WHERE NOT consumed GROUP BY wid, freq
 )""")
+    return parts
+
+
+def _bpe_oracle(rounds: int = 4) -> str:
+    parts = _bpe_ctes(rounds, final_state=False)
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS BIGINT) AS round, a AS left_sym, b AS right_sym,"
         f" a || b AS merged, cnt AS n_occurrences FROM t{r}"
@@ -1928,8 +1960,6 @@ def _bpe_oracle(rounds: int = 4) -> str:
 
 @query("bpe_learned_merges", oracle=_bpe_oracle(4))
 def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.bpe import bpe_merge_table
-
     docs = load_table(spark, sf_dir, "documents")
     return bpe_merge_table(docs, rounds=4).orderBy("round")
 
@@ -1984,10 +2014,6 @@ ORDER BY sel.doc_id
 """,
 )
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents")
     # positioned k-gram table (the _raw_shingles layout, but keeping pos —
     # winnowing selects by position): one doc-keyed exchange, reused by
@@ -2114,8 +2140,6 @@ FROM flags GROUP BY source ORDER BY source
 """,
 )
 def gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     tok = docs.repartition(par, F.col("doc_id")).select(
@@ -2131,8 +2155,6 @@ def gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("t", 1).over(w).alias("t2"),
         F.lead("t", 2).over(w).alias("t3"),
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     tok = materialize(tok)  # three consumers; cache() is pathological on
     # window-containing plans on this build (README "Performance")
     base = tok.groupBy("doc_id", "source").agg(
@@ -2213,40 +2235,8 @@ def gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds, aggregated over the final w4 state.
 # --------------------------------------------------------------------------
 def _bpe_stats_oracle(rounds: int = 4) -> str:
-    base = _bpe_oracle(rounds)
-    # reuse the merge oracle's CTE chain up to the LAST t{rounds}, then
-    # extend with m/w for the final round and aggregate the end state
-    head = base[: base.rindex("\n", 0, base.index("SELECT CAST(1"))]
     r = rounds
-    final = f""",
-m{r} AS MATERIALIZED (
-  SELECT wid, freq, i, s, match AND (mrank % 2 = 1) AS merge FROM (
-    SELECT wid, freq, i, s, match,
-           sum(CASE WHEN match THEN 1 ELSE 0 END)
-             OVER (PARTITION BY wid, run ORDER BY i) AS mrank
-    FROM (
-      SELECT wid, freq, i, s, match,
-             coalesce(sum(CASE WHEN match THEN 0 ELSE 1 END)
-               OVER (PARTITION BY wid ORDER BY i
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS run
-      FROM (
-        SELECT p.wid, p.freq, p.i, p.s,
-               coalesce(p.s = t.a AND p.s2 = t.b, false) AS match
-        FROM p{r} p, t{r} t
-      )
-    )
-  )
-),
-w{r} AS MATERIALIZED (
-  SELECT wid, freq, list(sym ORDER BY i) AS syms FROM (
-    SELECT wid, freq, i,
-           CASE WHEN merge THEN (SELECT a || b FROM t{r}) ELSE s END AS sym,
-           coalesce(lag(merge) OVER (PARTITION BY wid ORDER BY i),
-                    false) AS consumed
-    FROM m{r}
-  ) WHERE NOT consumed GROUP BY wid, freq
-)
+    return "WITH " + ",\n".join(_bpe_ctes(r, final_state=True)) + f"""
 SELECT CAST(count(*) AS BIGINT) AS n_words,
        CAST(sum(freq * len(wid)) AS BIGINT) AS chars_before,
        CAST(sum(freq * len(syms)) AS BIGINT) AS symbols_after,
@@ -2255,13 +2245,10 @@ SELECT CAST(count(*) AS BIGINT) AS n_words,
        (SELECT count(DISTINCT s)
         FROM (SELECT unnest(syms) AS s FROM w{r})) AS vocab_symbols
 FROM w{r}"""
-    return head + final
 
 
 @query("bpe_compression_stats", oracle=_bpe_stats_oracle(4))
 def bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.bpe import bpe_apply
-
     docs = load_table(spark, sf_dir, "documents")
     state = bpe_apply(docs, rounds=4)
     vocab = state.select(F.explode("syms").alias("s")).agg(
@@ -2408,9 +2395,6 @@ ORDER BY corpus_occurrences DESC, phrase ASC
 """,
 )
 def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.operators.join_policy import broadcast_if_small
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     toks = materialize(
         docs.select(
@@ -2603,10 +2587,6 @@ LIMIT 15
 """,
 )
 def dunning_g2_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t")
@@ -2719,8 +2699,6 @@ ORDER BY source
 """,
 )
 def zipf_fit_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select("source", F.explode(F.split(F.col("text"), " ")).alias("t"))
@@ -2758,6 +2736,17 @@ def zipf_fit_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
+# ``toks``/``tf``/``n_docs``: every token, the (doc_id, t) term
+# frequencies and the document count — the head of the TF-IDF oracles
+_TF_SQL = """toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
+),
+tf AS (
+  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY doc_id, t
+),
+n_docs AS (SELECT count(*) AS n FROM documents)"""
+
+
 # --------------------------------------------------------------------------
 # Q: doc_keyphrases_topk — per-document keyphrase extraction: rank each
 # document's terms by tf·idf and keep the top 3 (the summarization/tagging
@@ -2774,14 +2763,8 @@ def zipf_fit_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "doc_keyphrases_topk",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-),
-tf AS (
-  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY doc_id, t
-),
-n_docs AS (SELECT count(*) AS n FROM documents),
+    oracle=f"""
+WITH {_TF_SQL},
 idf AS (
   SELECT t, ln((SELECT n FROM n_docs) / (1.0 + count(DISTINCT doc_id))) AS idf
   FROM toks GROUP BY t
@@ -2802,8 +2785,6 @@ ORDER BY doc_id, rk
 """,
 )
 def doc_keyphrases_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("t")
@@ -3008,14 +2989,8 @@ def token_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "tfidf_cosine_doc_pairs",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-),
-tf AS (
-  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY doc_id, t
-),
-n_docs AS (SELECT count(*) AS n FROM documents),
+    oracle=f"""
+WITH {_TF_SQL},
 idf AS (
   SELECT t, ln((SELECT n FROM n_docs) / (1.0 + count(*))) AS idf
   FROM tf GROUP BY t
@@ -3044,8 +3019,6 @@ ORDER BY d1, d2
 """,
 )
 def tfidf_cosine_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("t"))
@@ -3257,8 +3230,6 @@ ORDER BY b.source
 """,
 )
 def source_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     cells = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -3340,8 +3311,6 @@ ORDER BY la, lb
 """,
 )
 def lang_char_trigram_js(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     docs = load_table(spark, sf_dir, "documents")
     tri = docs.select(
         "lang",
@@ -3650,14 +3619,8 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "kneser_ney_lm_scores",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, source, w[i] AS t, w[i+1] AS t2
-  FROM (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
-       (SELECT unnest(range(1, (SELECT max(len(string_split(text, ' '))) FROM documents) + 1)) AS i)
-  WHERE i <= len(w)
-),
-pairs AS (SELECT doc_id, source, t, t2 FROM toks WHERE t2 IS NOT NULL),
+    oracle=f"""
+WITH {_BIGRAM_SQL},
 big AS (SELECT t, t2, CAST(count(*) AS BIGINT) AS c2 FROM pairs GROUP BY t, t2),
 lefts AS (
   SELECT t, CAST(count(*) AS BIGINT) AS cl,
@@ -3675,42 +3638,16 @@ scores AS (
            AS lnp
   FROM big b JOIN lefts l ON b.t = l.t JOIN conts c ON b.t2 = c.t2
 ),
-per_doc AS (
-  SELECT p.doc_id, p.source, round(-sum(s.lnp) / count(*), 6) AS xent
-  FROM pairs p JOIN scores s ON p.t = s.t AND p.t2 = s.t2
-  GROUP BY p.doc_id, p.source
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       round(avg(xent), 4) AS avg_xent,
-       round(min(xent), 6) AS min_xent,
-       round(max(xent), 6) AS max_xent,
-       round(median(xent), 6) AS median_xent
-FROM per_doc
-GROUP BY source
-ORDER BY source
+{_PER_DOC_XENT_SQL}
+{_XENT_ROLLUP_SQL}
 """,
 )
 def kneser_ney_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "t"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     # the pair stream feeds FOUR aggregates (bigram counts, left totals,
     # continuation counts, the scoring probe) — materialize it once so the
     # doc-keyed window exchange is paid once, not re-planned per branch
-    pairs = materialize(
-        tok.select(
-            "doc_id", "source", "t", F.lead("t", 1).over(w).alias("t2")
-        ).filter(F.col("t2").isNotNull())
-    )
+    pairs = materialize(_bigram_frames(docs, "doc_id", "source")[1])
     big = pairs.groupBy("t", "t2").agg(
         F.count(F.lit(1)).cast("long").alias("c2")
     )
@@ -3736,24 +3673,7 @@ def kneser_ney_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lnp"),
         )
     )
-    per_doc = (
-        pairs.join(broadcast_if_small(scores), ["t", "t2"])
-        .groupBy("doc_id", "source")
-        .agg(
-            F.round(-F.sum("lnp") / F.count(F.lit(1)), 6).alias("xent")
-        )
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.round(F.avg("xent"), 4).alias("avg_xent"),
-            F.round(F.min("xent"), 6).alias("min_xent"),
-            F.round(F.max("xent"), 6).alias("max_xent"),
-            F.round(F.median("xent"), 6).alias("median_xent"),
-        )
-        .orderBy("source")
-    )
+    return _xent_by_source(pairs.join(broadcast_if_small(scores), ["t", "t2"]))
 
 
 # --------------------------------------------------------------------------
@@ -3798,12 +3718,7 @@ FROM d
 def dataset_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
-    n_stop = F.size(
-        F.filter(
-            toks,
-            lambda t: t.isin("the", "a", "an", "of", "to", "and", "in", "is"),
-        )
-    )
+    n_stop = _n_stopwords(toks)
     d = docs.select(
         "source",
         "lang",
@@ -3881,16 +3796,9 @@ ORDER BY quality_rank
 """,
 )
 def source_quality_token_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
-    n_stop = F.size(
-        F.filter(
-            toks,
-            lambda t: t.isin("the", "a", "an", "of", "to", "and", "in", "is"),
-        )
-    )
+    n_stop = _n_stopwords(toks)
     d = docs.filter(F.size(toks) > 0).select(
         "source",
         F.size(toks).alias("n_tok"),
@@ -3903,8 +3811,6 @@ def source_quality_token_frontier(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum("q_pm") * F.lit(1.0) / F.count(F.lit(1)) / 1000.0, 6
         ).alias("mean_quality"),
     )
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     per_src = materialize(per_src)  # ~20 rows; window + total both read it
     total = per_src.agg(F.sum("n_tokens").alias("all_tokens"))
     w = Window.orderBy(
@@ -3984,10 +3890,6 @@ ORDER BY source
 """,
 )
 def sequence_packing_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.functions.text import tokens
-
     L = 256
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.size(tokens(F.col("text"))).alias("nt")
@@ -4055,8 +3957,6 @@ ORDER BY lang
 """,
 )
 def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "lang",
@@ -4132,8 +4032,6 @@ FROM u
 """,
 )
 def temporal_split_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from f1_bigdata_pyspark_spark.utils import materialize
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros(F.col("ts")).alias("tus")
     )
@@ -4226,56 +4124,9 @@ def temporal_split_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus-sized single-partition window.
 # --------------------------------------------------------------------------
 def _packed_shards_oracle(rounds: int = 2, L: int = 64) -> str:
-    # the identical BPE unroll as _bpe_oracle, but emitting the FINAL
-    # merged state w{rounds} (the encoder's vocabulary view)
-    parts = [
-        """w0 AS MATERIALIZED (
-  SELECT wid, count(*) AS freq, string_split(wid, '') AS syms FROM (
-    SELECT unnest(string_split(lower(text), ' ')) AS wid FROM documents
-  ) WHERE len(wid) >= 2 GROUP BY wid
-)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(f"""p{r} AS MATERIALIZED (
-  SELECT wid, freq, u.i, u.s,
-         lead(u.s) OVER (PARTITION BY wid ORDER BY u.i) AS s2
-  FROM w{r - 1}, LATERAL (
-    SELECT unnest(generate_series(1, len(syms))) AS i, unnest(syms) AS s
-  ) u
-)""")
-        parts.append(f"""t{r} AS MATERIALIZED (
-  SELECT s AS a, s2 AS b, CAST(sum(freq) AS BIGINT) AS cnt
-  FROM p{r} WHERE s2 IS NOT NULL GROUP BY s, s2
-  ORDER BY cnt DESC, a, b LIMIT 1
-)""")
-        parts.append(f"""m{r} AS MATERIALIZED (
-  SELECT wid, freq, i, s, match AND (mrank % 2 = 1) AS merge FROM (
-    SELECT wid, freq, i, s, match,
-           sum(CASE WHEN match THEN 1 ELSE 0 END)
-             OVER (PARTITION BY wid, run ORDER BY i) AS mrank
-    FROM (
-      SELECT wid, freq, i, s, match,
-             coalesce(sum(CASE WHEN match THEN 0 ELSE 1 END)
-               OVER (PARTITION BY wid ORDER BY i
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS run
-      FROM (
-        SELECT p.wid, p.freq, p.i, p.s,
-               coalesce(p.s = t.a AND p.s2 = t.b, false) AS match
-        FROM p{r} p, t{r} t
-      )
-    )
-  )
-)""")
-        parts.append(f"""w{r} AS MATERIALIZED (
-  SELECT wid, freq, list(sym ORDER BY i) AS syms FROM (
-    SELECT wid, freq, i,
-           CASE WHEN merge THEN (SELECT a || b FROM t{r}) ELSE s END AS sym,
-           coalesce(lag(merge) OVER (PARTITION BY wid ORDER BY i),
-                    false) AS consumed
-    FROM m{r}
-  ) WHERE NOT consumed GROUP BY wid, freq
-)""")
+    # the BPE unroll emitting the FINAL merged state w{rounds} (the
+    # encoder's vocabulary view)
+    parts = _bpe_ctes(rounds, final_state=True)
     body = f"""vocab AS MATERIALIZED (
   SELECT sym, row_number() OVER (ORDER BY sym) AS id
   FROM (SELECT DISTINCT unnest(syms) AS sym FROM w{rounds})
@@ -4345,13 +4196,6 @@ ORDER BY h.source"""
 
 @query("packed_token_shards", oracle=_packed_shards_oracle(2, 64))
 def packed_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from f1_bigdata_pyspark_spark.functions.text import md5_long
-    from f1_bigdata_pyspark_spark.operators.bpe import bpe_apply
-    from f1_bigdata_pyspark_spark.sources.snapshots import SnapshotTable
-    from f1_bigdata_pyspark_spark.utils import materialize, scratch_dir
-
     L = 64
     docs = load_table(spark, sf_dir, "documents")
     state = bpe_apply(docs, rounds=2)  # (wid, freq, syms) post-merges
@@ -4568,8 +4412,6 @@ ORDER BY epoch, worker
 """,
 )
 def epoch_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )

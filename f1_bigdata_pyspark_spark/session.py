@@ -46,6 +46,14 @@ def env_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half of
+    physical memory, at most 48g, so the one local-mode JVM cannot grow
+    past what the host has."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(total // 2 // 2**20, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     cpus: int | None = None,
@@ -71,7 +79,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

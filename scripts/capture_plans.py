@@ -10,8 +10,9 @@ on the tuned session from ``session.get_spark`` over the scale-factor
 directory ``SPARK_GRAFT_SF_DIR`` names, writes its formatted plan to
 ``OUT_DIR/<query>.txt`` and prints one ``<sha256>  <query>`` line per
 plan. The hash is taken with the session's running counters stripped:
-Catalyst expression IDs (``#123``), exchange ``plan_id=`` numbers and
-the RDD ids of checkpointed inputs (``MapPartitionsRDD[12]``). So two
+Catalyst expression IDs (``#123``), exchange ``plan_id=`` numbers, the
+RDD ids of checkpointed inputs (``MapPartitionsRDD[12]``) and the
+suffixes of generated lambda variables (``lambda x_11``). So two
 builds of the same plan hash the same whatever ran before them in the
 session, and across commits: capture before and after a refactor and
 diff the hash lines.
@@ -33,7 +34,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
-_SESSION_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+")
+_SESSION_IDS = re.compile(
+    r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+|(?<=lambda [xyz]_)\d+"
+)
 
 
 def plan_sha256(plan: str) -> str:

@@ -1,8 +1,8 @@
 """Duplicated-code budget for the package, measured by
 ``scripts/clone_scan.py`` (identical 8-line windows of stripped code).
 
-The budgets are the counts the snapshot-family split reached; a change
-that clones code back in fails here. Raising a budget is a decision, so
+The budgets are the counts the snapshot-family split and the text/dedup
+shared builders reached; a change that clones code back in fails here. Raising a budget is a decision, so
 it needs a CHANGES.md line saying why. Pure Python: no Spark.
 """
 
@@ -17,10 +17,12 @@ sys.path.insert(0, os.path.join(ROOT, "scripts"))
 from clone_scan import scan  # noqa: E402
 
 BUDGET = {
-    "queries/extended.py": 47,
+    "queries/dedup_pipeline.py": 0,
+    "queries/extended.py": 12,
     "queries/snapshot_faces.py": 8,
+    "queries/text_pipeline.py": 16,
 }
-TOTAL_BUDGET = 1419
+TOTAL_BUDGET = 839
 
 
 def test_clone_budget():

@@ -1091,6 +1091,49 @@ def test_kaplan_meier_hand_cohort(spark, tmp_path):
     assert got == {3: (5, s3), 7: (5, s3), 14: (5, s3)}
 
 
+def test_session_window_overlap_skips_null_users(spark, tmp_path):
+    """``session_window_overlap`` on a hand table where a NULL-user_id
+    session overlaps W1 next to user 1's: the NULL session counts in
+    ``n_sessions`` but adds no user to ``n_users``, in the face and in its
+    DuckDB twin alike (the test tables hold no NULL user_id)."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from f1_bigdata_pyspark_spark.queries.registry import get_query
+    from tests.oracle_harness import compare, run_oracle, run_spark
+
+    t1, t3 = dt.datetime(2024, 1, 6, 10), dt.datetime(2024, 1, 26, 8)
+    five = dt.timedelta(minutes=5)
+    # (ts, user_id): one session each for user 1 and NULL in W1, user 2 in W3
+    rows = [(t1, 1), (t1 + five, 1), (t1, None), (t1 + five, None), (t3, 2)]
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(1, len(rows) + 1), pa.int64()),
+            "ts": pa.array([r[0] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[1] for r in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows), pa.string()),
+            "value": pa.array([1.0] * len(rows), pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }
+    )
+    pq.write_table(tbl, tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS "
+        f"SELECT * FROM read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+
+    q = get_query("session_window_overlap")
+    sres = run_spark(q.fn, spark, str(tmp_path))
+    assert compare(q.name, sres, run_oracle(con, q.oracle)) == []
+    cols, got = sres
+    assert cols == ["win_name", "n_sessions", "n_users"]
+    assert sorted(got) == [("W1", 2, 1), ("W3", 1, 1)]
+
+
 def test_attribution_models_conserve_revenue(spark, sf_smoke):
     """Credit conservation: every attribution model must hand out exactly
     the revenue of the purchases that HAVE at least one touch — no credit

@@ -189,3 +189,18 @@ def test_stream_read_workers_import_installed_pyspark(spark, tmp_path):
     assert q.exception() is None
     files = {f for row in seen for f in row}
     assert seen and not any(".zip" in f for f in files), files
+
+
+_JVM_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def test_default_driver_heap_fits_physical_memory(spark):
+    """Without ``SPARK_DRIVER_MEMORY`` the session's heap is sized to the
+    host: a heap larger than physical memory lets the JVM grow until the
+    host runs short."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        pytest.skip("SPARK_DRIVER_MEMORY sets the heap")
+    heap = spark.sparkContext.getConf().get("spark.driver.memory").lower()
+    heap_bytes = int(heap[:-1]) * _JVM_UNITS[heap[-1]]
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < heap_bytes <= physical, (heap, physical)
